@@ -91,7 +91,9 @@ def md5_prefix_int_fast_expr(col: str, nhex: int = 8, start: int = 1) -> str:
     exactly (8 at every call site).  The DuckDB oracle text stays on
     ``md5_prefix_int_sql``'s instr chain: oracle SQL is fingerprint-frozen
     and only VALUES need to match across engines."""
-    assert nhex <= 15, "conv() overflows bigint past 15 hex digits"
+    if nhex > 15:
+        raise ValueError(
+            f"nhex={nhex}: conv() overflows bigint past 15 hex digits")
     return (f"cast(conv(substr(md5({col}), {start}, {nhex}), 16, 10) "
             f"as bigint)")
 

@@ -41,6 +41,9 @@ from .udfs import extract_udf, make_extract_udf
 # and the quietest round read 10.4s / 11.5s / 13.0s for 64/128/256.  A
 # fixed variant order fakes large gains for whichever slot dodges the
 # host's throttle cycle; rotate the order when re-measuring.
+# Both measurements predate the removal of the ~0.25 s per-task zip-archive
+# rescan in workers (udfs.py), which cut the fixed cost of every task, so
+# the tuning may no longer hold; re-tune only on a measured A/B.
 DEFAULT_ARROW_BATCH = 64
 PYTHON_SOCKET_BUFFER = 2 * 1024 * 1024
 
@@ -95,7 +98,11 @@ def build_session(app_name: str = "readability-spark",
 
 
 def n_buckets_for(spark: SparkSession, factor: int = 4) -> int:
-    """Salt-bucket count: ~4× parallelism keeps tasks uniform under skew."""
+    """Salt-bucket count: ~4× parallelism keeps tasks uniform under skew.
+
+    The factor was chosen while every task still paid ~0.25 s of worker
+    set-up (the zip-archive rescan udfs.py removes); with cheaper tasks a
+    different factor may win, which only a measured A/B should decide."""
     return max(1, spark.sparkContext.defaultParallelism * factor)
 
 

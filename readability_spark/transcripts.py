@@ -12,6 +12,7 @@ scaling benchmark an apples-to-apples comparison.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import os
 import random
 from typing import Optional
@@ -135,8 +136,16 @@ def write_transcripts(spark: SparkSession, path: str, n_convs: int = 200,
 
     The cache key includes the generation parameters — a bare _SUCCESS
     check would silently reuse a stale table when SPARK_GRAFT_BENCH_CONVS
-    (or seed/fixtures) changes."""
-    params = f"n_convs={n_convs} seed={seed} fixtures={use_fixtures}"
+    (or seed/fixtures) changes — and the count and content hash of the
+    fixture pool, so a missing or changed fixture corpus regenerates the
+    table instead of reusing one built from another pool."""
+    pool = _load_fixture_pool() if use_fixtures else []
+    pool_hash = hashlib.sha256()
+    for page in pool:
+        pool_hash.update(hashlib.sha256(page.encode()).digest())
+    params = (f"n_convs={n_convs} seed={seed} fixtures={use_fixtures} "
+              f"n_fixtures={len(pool)} "
+              f"fixtures_sha256={pool_hash.hexdigest()}")
     marker = os.path.join(path, "_PARAMS")
     fresh = (os.path.exists(os.path.join(path, "_SUCCESS"))
              and os.path.exists(marker)

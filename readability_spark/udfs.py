@@ -16,9 +16,12 @@ SQL users (candidate scoring / link stats become ordinary groupBys there).
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -30,6 +33,21 @@ from readability_core.vdom import parse_html
 from .schema import EXTRACT_SCHEMA, EXTRACT_SCHEMA_HTML, NODE_SCHEMA
 
 _FIELDS = [f.name for f in EXTRACT_SCHEMA.fields]
+
+# PySpark calls importlib.invalidate_caches() at the start of every task.
+# Before CPython 3.13 that makes every cached zipimporter re-read its whole
+# archive directory in pure Python, and a worker caches one importer per
+# package prefix of pyspark.zip, the py4j zip and the spark-core jar: about
+# 0.25 s per task.  In a worker (a TaskContext exists while the task's UDFs
+# are unpickled, which imports this module) the rescan is dropped for the
+# life of the process.  Safe because the archives on a worker's path never
+# change under it: Spark ships added files and --py-files once each and
+# adds them as new path entries, whose importers read their directory when
+# created.  Directory (FileFinder) invalidation is kept, so newly shipped
+# .py files still import.  3.13 made the rescan lazy; the driver is never
+# patched.
+if sys.version_info < (3, 13) and TaskContext.get() is not None:
+    zipimport.zipimporter.invalidate_caches = lambda self: None
 
 
 def _extract_record(html, char_threshold: int = 500,

@@ -3,6 +3,8 @@ the reference's <1s performance budget on a 100-paragraph document."""
 
 import time
 
+import pytest
+
 from readability_core import Readable
 from readability_core.extract import extract, extract_full
 from readability_core.render import to_markdown
@@ -15,6 +17,7 @@ def _load(case):
                 encoding="utf-8", errors="replace").read()
 
 
+@pytest.mark.requires_reference
 def test_fixture_compatibility_cases():
     for case in ("001", "003-metadata-preferred",
                  "004-metadata-space-separated-properties", "aclu"):

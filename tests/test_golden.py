@@ -26,6 +26,7 @@ def test_corpus_complete(golden):
     assert len(golden) >= 128
 
 
+@pytest.mark.requires_reference
 def test_every_fixture_matches_golden(golden):
     from readability_core import extract
 

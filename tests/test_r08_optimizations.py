@@ -75,6 +75,17 @@ def test_md5_prefix_int_fast_equals_instr_chain(spark):
             .count() == 0, (nhex, start)
 
 
+def test_md5_prefix_int_fast_rejects_overflowing_width():
+    """Past 15 hex digits the unsigned parse no longer fits a bigint; the
+    guard is a ValueError, which ``python -O`` keeps (an assert it strips)."""
+    from readability_spark.ops.common import md5_prefix_int_fast_expr
+
+    assert "15" in md5_prefix_int_fast_expr("s", 15)
+    for nhex in (16, 32):
+        with pytest.raises(ValueError, match="overflows bigint"):
+            md5_prefix_int_fast_expr("s", nhex)
+
+
 def test_simhash_conv_form_equals_instr_form(spark):
     """The conv-word + shift/and + 2*b>n simhash equals the r7
     per-bit instr/substr ±1-sum form on the real corpus."""

@@ -34,6 +34,7 @@ def fixture_turns(spark):
     return spark.createDataFrame(pdf).repartition(4)
 
 
+@pytest.mark.requires_reference
 def test_udf_equals_plain_function_on_all_fixtures(spark, fixture_turns):
     """THE per-row invariant: UDF path ≡ pure-Python path, byte-exact,
     under stable (conv_id, turn_idx) ordering."""
@@ -56,6 +57,7 @@ def test_udf_equals_plain_function_on_all_fixtures(spark, fixture_turns):
             exp["candidate_scores"]), conv_id
 
 
+@pytest.mark.requires_reference
 def test_udf_full_parity_with_aria_on_sample(spark, fixture_turns):
     """make_extract_udf(include_aria=True) ≡ plain extract(build_aria=True)
     including the v2 classifier, possibility score, and the aria snapshot."""
@@ -297,3 +299,24 @@ def test_generator_skew():
     lengths = Counter(r[0] for r in rows)
     assert max(lengths.values()) >= 100     # at least one long conversation
     assert min(lengths.values()) <= 8
+
+
+def test_write_transcripts_key_tracks_fixture_pool(spark, tmp_path,
+                                                   monkeypatch):
+    """A missing or changed fixture corpus regenerates the cached table
+    instead of reusing one generated from another pool."""
+    from readability_spark import transcripts
+
+    path = str(tmp_path / "transcripts")
+    pool = ["<html><body><p>fixture page one</p></body></html>"]
+    monkeypatch.setattr(transcripts, "_load_fixture_pool", lambda: pool)
+
+    def written_texts():
+        transcripts.write_transcripts(spark, path, n_convs=4, seed=7)
+        return {r.text for r in spark.read.parquet(path).collect()}
+
+    assert pool[0] in written_texts()
+    page = pool.pop()                       # the corpus goes missing
+    assert page not in written_texts()
+    pool.append(page.replace("one", "two"))  # same count, other content
+    assert pool[0] in written_texts()

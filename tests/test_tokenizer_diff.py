@@ -47,7 +47,7 @@ def assert_equal_parse(html):
 FIXTURES = "/root/reference/test/test-pages"
 
 
-@pytest.mark.skipif(not os.path.isdir(FIXTURES), reason="fixture corpus absent")
+@pytest.mark.requires_reference
 def test_full_fixture_corpus_tree_equal():
     for case in sorted(os.listdir(FIXTURES)):
         path = os.path.join(FIXTURES, case, "source.html")

@@ -16,6 +16,8 @@ from readability_core.aria import (
 from readability_core.preprocess import preprocess_document
 from readability_core.vdom import parse_html
 
+pytestmark = pytest.mark.requires_reference("src/test/fixtures/yahoo.html")
+
 YAHOO = "/root/reference/src/test/fixtures/yahoo.html"
 
 
