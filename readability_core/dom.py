@@ -115,21 +115,6 @@ def is_probably_visible(el: VElement) -> bool:
     )
 
 
-def has_ancestor_tag(node: VNode, tag: str, max_depth: int = -1) -> bool:
-    """dom.ts:125-151."""
-    tag = tag.lower()
-    depth = 0
-    cur = node.parent
-    while cur is not None:
-        if max_depth > 0 and depth > max_depth:
-            return False
-        if cur.tag == tag:
-            return True
-        cur = cur.parent
-        depth += 1
-    return False
-
-
 def has_child_block_element(el: VElement) -> bool:
     """dom.ts:154-162."""
     return any(

@@ -285,44 +285,3 @@ def extract_from_doc(doc: VDocument, error: Optional[str],
     }
     return record, doc, root, candidates
 
-
-def analyze_and_extract(html: Optional[str],
-                        char_threshold: int = DEFAULT_CHAR_THRESHOLD,
-                        base_uri: str = "about:blank",
-                        build_aria: bool = True) -> dict[str, Any]:
-    """Fused two-phase analysis: ONE parse serves structure detection (raw
-    tree — detect/index.ts:52-55 analyzes pre-preprocess) and extraction
-    (which then preprocesses the same tree in place).  The reference
-    double-parses for this (cli.js:185+197, per its architecture-decision
-    doc); fusing removes the second parse — the single largest CPU item.
-
-    Returns the extraction record with structure fields merged in
-    (structure_* prefix).
-    """
-    from .detect import analyze_document_structure_doc, \
-        format_sections_as_markdown
-
-    doc, error = parse_guarded(html, base_uri)
-    s = analyze_document_structure_doc(doc)          # raw tree, no mutation
-    record, _doc, _root, _cands = extract_from_doc(  # preprocesses in place
-        doc, error, char_threshold, base_uri=base_uri,
-        build_aria=build_aria)
-    pag = s.get("pagination") or {}
-    breadcrumb = ""
-    if s["breadcrumb"] is not None:
-        breadcrumb = " > ".join(i["label"] for i in s["breadcrumb"]["items"])
-    record.update({
-        "structure_n_headers": len(s["headers"]),
-        "structure_n_navs": len(s["navigations"]),
-        "structure_nav_types": [n["type"] for n in s["navigations"]],
-        "structure_has_main": s["mainContent"] is not None,
-        "structure_has_sidebar": s["sidebar"] is not None,
-        "structure_has_footer": s["footer"] is not None,
-        "structure_n_sections": len(s.get("sections") or []),
-        "structure_outline": format_sections_as_markdown(
-            s.get("sections") or []),
-        "structure_breadcrumb": breadcrumb,
-        "structure_pagination_prev": (pag.get("prev") or {}).get("href"),
-        "structure_pagination_next": (pag.get("next") or {}).get("href"),
-    })
-    return record

@@ -4,30 +4,19 @@ Reimplements title/byline/lang/siteName/link extraction
 (/root/reference/src/extract/extract.ts:488-616).  Each is a priority
 ``coalesce`` over filtered node sets, which is exactly how the Spark layer
 expresses them relationally when the node table is exploded.
+
+``nodes`` is an optional dict of per-tag node lists in document order
+(title/meta off the documentElement, h1/h2/a off the body), as
+``extract_from_doc`` pre-collects them; without it each extractor scans
+the tree itself, with identical results.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from .dom import collect_by_tags, get_elements_by_tag_name, get_inner_text, \
-    js_trim
+from .dom import get_elements_by_tag_name, get_inner_text, js_trim
 from .vdom import VDocument
-
-
-def collect_metadata_nodes(doc: VDocument) -> dict:
-    """Pre-collect every node set the metadata extractors scan, in TWO tree
-    walks instead of six (title/meta off the documentElement; h1/h2/a off
-    the body).  Each list is element-for-element what the corresponding
-    ``get_elements_by_tag_name`` call returns — collect_by_tags guarantees
-    identical document order — so passing the result as ``nodes=`` to the
-    functions below is behavior-identical to their self-scanning default.
-    Only valid while the tree is unmutated (i.e. after preprocess; scoring
-    never splices)."""
-    de = collect_by_tags(doc.document_element, ("title", "meta"))
-    body = collect_by_tags(doc.body, ("h1", "h2", "a"))
-    return {"title": de["title"], "meta": de["meta"],
-            "h1": body["h1"], "h2": body["h2"], "a": body["a"]}
 
 
 def get_article_title(doc: VDocument, nodes: Optional[dict] = None

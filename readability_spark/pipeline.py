@@ -22,7 +22,7 @@ on a small column set).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .udfs import extract_udf, make_extract_udf
@@ -35,15 +35,16 @@ from .udfs import extract_udf, make_extract_udf
 # default 64KB!) this took the flagship job from 432 to ~1250 turns/s at
 # local[32] — the buffer must hold ~one batch so the JVM can stage the
 # next batch while the worker computes the current one.
-# Re-tuned after the r5 core speedup (tools/arrow_batch_ab.py, two
-# interleaved sessions in BENCH/arrow_ab_history.jsonl): 64 still wins —
+# Re-tuned after the r5 core speedup (two interleaved sessions, recorded
+# in BENCH/arrow_ab_history.jsonl): 64 still wins —
 # rotated-order medians vs 64 were 0.83 (batch=128) and 0.69 (batch=256),
 # and the quietest round read 10.4s / 11.5s / 13.0s for 64/128/256.  A
 # fixed variant order fakes large gains for whichever slot dodges the
 # host's throttle cycle; rotate the order when re-measuring.
 # Both measurements predate the removal of the ~0.25 s per-task zip-archive
 # rescan in workers (udfs.py), which cut the fixed cost of every task, so
-# the tuning may no longer hold; re-tune only on a measured A/B.
+# the tuning may no longer hold.  A re-tune is decided by perfbench
+# parent/change pairs (perfbench/README.md) on both benchmark workloads.
 DEFAULT_ARROW_BATCH = 64
 PYTHON_SOCKET_BUFFER = 2 * 1024 * 1024
 
@@ -106,17 +107,25 @@ def n_buckets_for(spark: SparkSession, factor: int = 4) -> int:
     return max(1, spark.sparkContext.defaultParallelism * factor)
 
 
+def salt_col(num_buckets: int) -> Column:
+    """bucket_id = pmod(xxhash64(conv_id, turn_idx), N) as int.
+
+    The one definition of the salt: batch, whale tier, dedup, resume and
+    streaming must agree on it, because the lineage table records buckets
+    by this id and a resume anti-joins on it.
+    """
+    return F.pmod(F.xxhash64("conv_id", "turn_idx"),
+                  F.lit(num_buckets)).cast("int")
+
+
 def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
-    """Add bucket_id = pmod(xxhash64(conv_id, turn_idx), N) and repartition.
+    """Add bucket_id = salt_col(N) and repartition on it.
 
     Salting on (conv_id, turn_idx) — not conv_id alone — is what breaks the
     long-conversation skew the north rule calls out; it is safe because
     extraction is stateless per turn.
     """
-    df = df.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
-        .cast("int"))
+    df = df.withColumn("bucket_id", salt_col(num_buckets))
     return df.repartition(num_buckets, "bucket_id")
 
 
@@ -255,10 +264,7 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
             extracted = _tiered_distinct_extract(
                 distinct, udf, whale_safe_bytes, char_threshold)
         return (
-            keyed.withColumn(
-                "bucket_id",
-                F.pmod(F.xxhash64("conv_id", "turn_idx"),
-                       F.lit(num_buckets)).cast("int"))
+            keyed.withColumn("bucket_id", salt_col(num_buckets))
             .join(extracted, "_tkey")
             .select(*cols, "bucket_id",
                     *[f for f in extracted.columns if f != "_tkey"]))
@@ -276,10 +282,7 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     # lineage/metrics stay uniform across tiers
     heavy = (df.select(*cols, "text")
              .filter(size >= whale_safe_bytes)
-             .withColumn(
-                 "bucket_id",
-                 F.pmod(F.xxhash64("conv_id", "turn_idx"),
-                        F.lit(num_buckets)).cast("int")))
+             .withColumn("bucket_id", salt_col(num_buckets)))
     heavy_out = _whale_group_extract(
         heavy, [*cols, "bucket_id"], ["conv_id", "turn_idx"],
         char_threshold, salted.schema)
@@ -336,10 +339,7 @@ def resume_filter(df: DataFrame, metrics: DataFrame,
     no shuffle of the big side beyond the salt repartition it needs anyway.
     """
     done = metrics.filter(F.col("status") == "ok").select("bucket_id").distinct()
-    salted = df.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_buckets))
-        .cast("int"))
+    salted = df.withColumn("bucket_id", salt_col(num_buckets))
     return salted.join(F.broadcast(done), "bucket_id", "left_anti")
 
 

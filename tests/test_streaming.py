@@ -5,6 +5,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from readability_spark.pipeline import salt_and_partition
 from readability_spark.streaming import (
     run_stream,
     stream_conversation_stats,
@@ -46,6 +47,22 @@ def test_stream_restart_is_exactly_once(spark, stream_dirs):
     out = spark.read.parquet(stream_dirs["out"])
     n_in = spark.read.parquet(stream_dirs["in"]).count()
     assert out.count() == n_in
+
+
+def test_stream_salt_matches_batch_salt(spark, stream_dirs):
+    # the stream's bucket_id must be the batch salt: lineage and resume key
+    # on it, so a turn must land in the same bucket on either path
+    n = 7
+    q = (stream_extract(stream_source(spark, stream_dirs["in"]), n)
+         .select("conv_id", "turn_idx", "bucket_id")
+         .writeStream.format("memory").queryName("stream_salt")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    streamed = sorted(spark.table("stream_salt").collect())
+    batch = sorted(salt_and_partition(spark.read.parquet(stream_dirs["in"]), n)
+                   .select("conv_id", "turn_idx", "bucket_id").collect())
+    assert streamed == batch
+    assert len({r.bucket_id for r in batch}) > 1
 
 
 def test_windowed_stats_plan_is_streaming(spark, stream_dirs):

@@ -1,40 +1,25 @@
-"""Two-parallelism scaling benchmark (north-rule cluster-size criterion).
+"""Multiprocessing control for bench.py's self-normalization.
 
-No real cluster exists in this sandbox, so the N → 4N executor criterion is
-evidenced by running the identical flagship extraction job in fresh JVMs at
-multiple parallelism levels over the same deterministic input.
+``mp_control(k)`` runs the same per-turn extraction as bench.py's flagship
+job in a plain ``multiprocessing`` pool of ``k`` workers — no JVM, no
+shuffle, no Arrow — over the bench transcript table, and returns its
+docs/sec.  bench.py interleaves it with the Spark job and divides by it, so
+a host-wide slowdown moves both sides alike.
 
-Measurement protocol — this VM is a shared-tenancy guest whose effective
-CPU swings several-fold over minutes (a pure-Python multiprocessing control
-of the SAME extraction work measured 9s..66s for identical runs).  To make
-the efficiency number meaningful:
-- levels are run INTERLEAVED over multiple rounds (2, 8, 32, 2, 8, 32, …)
-  so every level samples the same noise distribution;
-- each bench invocation itself runs the job twice and reports the faster;
-- the per-level result is the best across rounds (least-stolen window);
-- an mp-pool control at each level reports the hardware's achievable
-  ceiling for this exact workload, so pipeline efficiency can be judged
-  against what the silicon actually offered.
-
-Writes BENCH/BASELINE.md and prints one JSON line.
+The r1–r8 2/8/32-level scaling runs this module used to drive are recorded
+in BENCH/scaling_history.jsonl and BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
 
 import glob
-import json
-import math
 import multiprocessing as mp
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)        # for the mp-control workers
-
-LEVELS = [2, 8, 32]
-ROUNDS = int(os.environ.get("SCALING_ROUNDS", "2"))
 
 
 def _mp_work(myfiles):
@@ -59,376 +44,3 @@ def mp_control(k: int) -> tuple[float, int]:
         total = sum(pool.map(_mp_work, chunks))
     dt = time.time() - t0
     return total / dt, total
-
-
-def run_at(cpus: int) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py"), "--extract-only"],
-        env=env, capture_output=True, text=True, timeout=3600, cwd=REPO)
-    lines = out.stdout.strip().splitlines()
-    if out.returncode != 0 or not lines:
-        # surface the real error — a swallowed stderr plus an IndexError
-        # here would lose the whole multi-round run's context
-        raise RuntimeError(
-            f"bench.py failed at local[{cpus}] (rc={out.returncode}); "
-            f"stderr tail: {out.stderr.strip()[-800:]}")
-    return json.loads(lines[-1])
-
-
-HISTORY = os.path.join(REPO, "BENCH", "scaling_history.jsonl")
-
-
-def main() -> None:
-    best_tp: dict[int, float] = {k: 0.0 for k in LEVELS}
-    best_sec: dict[int, float] = {k: float("inf") for k in LEVELS}
-    best_ctl: dict[int, float] = {k: 0.0 for k in LEVELS}
-    n_turns = 0
-    for _ in range(ROUNDS):
-        for k in LEVELS:
-            r = run_at(k)
-            n_turns = r["extra"]["n_turns"]
-            tp = r["extra"]["turns_per_sec"]
-            if tp > best_tp[k]:
-                best_tp[k] = tp
-                best_sec[k] = r["queries"]["extract_throughput"]
-            ctl, _total = mp_control(k)
-            best_ctl[k] = max(best_ctl[k], round(ctl, 1))
-
-    # Persist this run, then take the best window per level across ALL
-    # recorded runs: the host's effective CPU swings several-fold between
-    # runs, so single-invocation ratios mix different noise levels; the
-    # per-level maxima are each level's least-throttled observation.
-    os.makedirs(os.path.dirname(HISTORY), exist_ok=True)
-    if ROUNDS > 0:
-        with open(HISTORY, "a") as f:
-            f.write(json.dumps({
-                "tp": {str(k): best_tp[k] for k in LEVELS},
-                "sec": {str(k): best_sec[k] for k in LEVELS},
-                "ctl": {str(k): best_ctl[k] for k in LEVELS},
-                "n_turns": n_turns,
-            }) + "\n")
-    n_recorded_runs = 0
-    for line in open(HISTORY):
-        rec = json.loads(line)
-        n_recorded_runs += 1
-        # latest record wins: early history rows predate the final bench
-        # corpus (13,351 turns vs 29,797) and SCALING_ROUNDS=0 regeneration
-        # must not resurrect the stale count into the report header
-        n_turns = rec.get("n_turns", 0) or n_turns
-        for k in LEVELS:
-            tp = rec["tp"].get(str(k), 0.0)
-            if tp > best_tp[k]:
-                best_tp[k] = tp
-                best_sec[k] = rec["sec"][str(k)]
-            best_ctl[k] = max(best_ctl[k], rec["ctl"].get(str(k), 0.0))
-
-    # Efficiency must pair measurements from the SAME noise window: each
-    # history record is one interleaved run, so per-record ratios are
-    # apples-to-apples; cross-record pairing (best level-2 window vs best
-    # level-8 window) systematically understates scaling when the smaller
-    # level catches a quiet minute.  Report the best same-window ratio.
-    def record_effs():
-        effs_2_8, effs_8_32 = [], []
-        # per-run companions for the 2→8 ratio: the same-window mp-control
-        # efficiency (what the silicon delivered to an embarrassingly-
-        # parallel pool during THAT run) and the control-relative pipeline
-        # efficiency (pipeline retention of whatever the host offered)
-        ctl_effs_2_8, rel_effs_2_8 = [], []
-        for line in open(HISTORY):
-            rec = json.loads(line)
-            t2, t8, t32 = (rec["tp"].get("2", 0), rec["tp"].get("8", 0),
-                           rec["tp"].get("32", 0))
-            c2, c8 = rec["ctl"].get("2", 0), rec["ctl"].get("8", 0)
-            if t2 and t8:
-                e = round(t8 / (4 * t2), 3)
-                effs_2_8.append(e)
-                ce = round(c8 / (4 * c2), 3) if c2 and c8 else None
-                ctl_effs_2_8.append(ce)
-                rel_effs_2_8.append(round(e / ce, 3) if ce else None)
-            if t8 and t32:
-                effs_8_32.append(round(t32 / (4 * t8), 3))
-        return effs_2_8, effs_8_32, ctl_effs_2_8, rel_effs_2_8
-
-    from statistics import median
-
-    effs_2_8, effs_8_32, ctl_effs_2_8, rel_effs_2_8 = record_effs()
-    # control-clean runs: the mp control itself scaled ~linearly 2→8
-    # (ctl_eff within 15% of 1.0) — i.e. the host actually offered 4×
-    # more CPU at the larger level during that window.  A run whose
-    # CONTROL failed that bar cannot speak to pipeline scaling either way.
-    CLEAN_BAND = (0.85, 1.15)
-    clean_effs_2_8 = [e for e, ce in zip(effs_2_8, ctl_effs_2_8)
-                      if ce is not None and CLEAN_BAND[0] <= ce <= CLEAN_BAND[1]]
-    rel_vals = [r for r in rel_effs_2_8 if r is not None]
-    ctl_stamped = [c for c in ctl_effs_2_8 if c is not None]
-    med_ctl_2_8 = round(median(ctl_stamped), 3) if ctl_stamped else 0.0
-    med_clean_2_8 = round(median(clean_effs_2_8), 3) if clean_effs_2_8 else 0.0
-    med_rel_2_8 = round(median(rel_vals), 3) if rel_vals else 0.0
-    eff_2_8 = max(effs_2_8) if effs_2_8 else 0.0
-    eff_8_32 = max(effs_8_32) if effs_8_32 else 0.0
-    med_2_8 = round(median(effs_2_8), 3) if effs_2_8 else 0.0
-    med_8_32 = round(median(effs_8_32), 3) if effs_8_32 else 0.0
-    ctl_eff_2_8 = round(best_ctl[8] / (4 * best_ctl[2]), 3)
-    ctl_eff_8_32 = round(best_ctl[32] / (4 * best_ctl[8]), 3)
-
-    result = {
-        "metric": "scaling efficiency N -> 4N (parallelism levels, "
-                  "best-of-interleaved-rounds)",
-        "n_turns": n_turns,
-        "turns_per_sec": {str(k): best_tp[k] for k in LEVELS},
-        "mp_control_docs_per_sec": {str(k): best_ctl[k] for k in LEVELS},
-        "efficiency_2_to_8": eff_2_8,
-        "efficiency_8_to_32": eff_8_32,
-        "median_efficiency_2_to_8": med_2_8,
-        "median_efficiency_8_to_32": med_8_32,
-        "median_efficiency_2_to_8_control_clean": med_clean_2_8,
-        "n_control_clean_runs_2_to_8": len(clean_effs_2_8),
-        "median_control_relative_efficiency_2_to_8": med_rel_2_8,
-        "per_run_efficiencies_2_to_8": effs_2_8,
-        "per_run_control_efficiencies_2_to_8": ctl_effs_2_8,
-        "per_run_control_relative_2_to_8": rel_effs_2_8,
-        "per_run_efficiencies_8_to_32": effs_8_32,
-        "control_efficiency_2_to_8": ctl_eff_2_8,
-        "control_efficiency_8_to_32": ctl_eff_8_32,
-        "target": 0.8,
-        "pass": eff_2_8 >= 0.8,
-    }
-
-    rows = "\n".join(
-        f"| local[{k}] | {best_sec[k]} | {best_tp[k]} | {best_ctl[k]} |"
-        for k in LEVELS)
-
-    # per-round bench normalization table (bench.py appends one row per
-    # full run; the normalized ratio is the round-over-round comparable)
-    bench_hist = os.path.join(REPO, "BENCH", "bench_history.jsonl")
-    bench_rows = []
-    if os.path.exists(bench_hist):
-        for line in open(bench_hist):
-            r = json.loads(line)
-            ex = r.get("extra", {})
-            if "normalized_tp_over_control" in ex:
-                bench_rows.append(
-                    f"| {time.strftime('%Y-%m-%d %H:%M', time.localtime(r['t']))} "
-                    f"| {ex['turns_per_sec']} | {ex['control_docs_per_sec']} "
-                    f"| {ex['normalized_tp_over_control']} "
-                    f"| {ex.get('normalized_median', '—')} "
-                    f"| {ex.get('normalized_spread', '—')} |")
-    bench_table = "\n".join(bench_rows) or "| (no runs recorded yet) | | | | | |"
-
-    # ~10× scale-up probe (tools/scaleup_bench.py appends one row per run;
-    # the LATEST row is the current-code evidence, the first row — fixed-k
-    # semdedup — is kept as the quadratic contrast)
-    scaleup_hist = os.path.join(REPO, "BENCH", "scaleup_history.jsonl")
-    scaleup_md = ("*(not yet run — `python tools/scaleup_bench.py` on an "
-                  "idle box)*")
-    if os.path.exists(scaleup_hist):
-        sruns = [json.loads(line) for line in open(scaleup_hist)]
-        if sruns:
-            last = sruns[-1]
-            w = last["extra"]["walls"]
-            growth = round(last["extra"]["n_turns_10x"]
-                           / last["extra"]["n_turns_1x"], 2)
-            srows = "\n".join(
-                f"| {q} | {v['sec_1x']} | {v['sec_10x']} "
-                f"| {last['queries'][q]} |" for q, v in w.items())
-            fixed_sem = next((r["queries"]["semdedup"] for r in sruns
-                              if "semdedup" in r.get("queries", {})), None)
-            contrast = (
-                f"The probe's first run measured the FIXED-k gate form of "
-                f"semdedup at **{fixed_sem}×** — the (n/k)² per-cell "
-                f"quadratic that motivated `semdedup_scaled` (k = √n, the "
-                f"flat quantizer's Θ(n^1.5) balance point; its bound here "
-                f"is {growth}^1.5 ≈ {round(growth ** 1.5, 1)}×)."
-                if fixed_sem else "")
-            scaleup_md = f"""Deterministic ~10× corpus (tools/scaleup_bench.py: {last['extra']['n_turns_10x']:,}
-transcript turns = {growth}× the bench table; 50k documents over the same
-vocabulary with a constant planted near-dup rate; 20k clustered
-embeddings), each query run at 1× and 10× back-to-back in the same window
-(controls: open {last['extra']['control_open_docs_per_sec']}, close
-{last['extra'].get('control_close_docs_per_sec', '—')} docs/s).  A hidden
-quadratic would show a wall ratio far ABOVE the data growth; fixed
-overheads amortizing pull it below.  Latest run
-({len(sruns)} recorded in scaleup_history.jsonl):
-
-| query | wall 1× (s) | wall ~10× (s) | ratio |
-| --- | --- | --- | --- |
-{srows}
-
-Every query grows sub-linearly in data size except `semdedup_scaled`,
-whose exact-algorithm bound is Θ(n^1.5) — measured exponent
-≈ {round(math.log(last['queries'].get('semdedup_scaled', 1)) / math.log(growth), 2) if last['queries'].get('semdedup_scaled') else '—'}, under the bound.  {contrast}"""
-    md = f"""# BENCH baseline — scaling evidence
-
-North-rule criterion: throughput scaling efficiency ≥ 0.8 between N and 4N
-executors.  No real cluster exists in this sandbox, so the identical
-flagship per-turn extraction job (salted repartition → Arrow-batched
-extract UDF → aggregate) runs at multiple parallelism levels in fresh JVMs
-over the same deterministic transcript table (seed=42, {n_turns} turns,
-fixture pages embedded round-robin, Zipf-skewed conversation lengths).
-
-**Measurement protocol.** This VM is shared-tenancy: a pure-Python
-multiprocessing control running the *same* extraction measured identical
-runs anywhere from 9s to 66s depending on the minute.  Levels are therefore
-run interleaved (2, 8, 32 per round); {n_recorded_runs} interleaved runs
-are recorded in scaling_history.jsonl, each invocation runs the job twice,
-and the table reports the best window per level, alongside the mp-pool
-control (the silicon's achievable ceiling for this exact workload at that
-process count).
-
-| parallelism | wall sec | pipeline turns/sec | mp control docs/sec |
-| --- | --- | --- | --- |
-{rows}
-
-### Adjudication (north rule ≥ 0.8, N → 4N)
-
-1. **Best same-window 2→8 efficiency: {eff_2_8} —
-   {'PASS' if result['pass'] else 'FAIL'}.**  When the
-   host actually delivers 4× CPU, the pipeline scales past linear
-   (partition-count effects at local[2] make >1 possible).
-2. **Control-relative median (all {len(ctl_stamped)} control-stamped
-   runs): {med_rel_2_8} —
-   {'PASS' if med_rel_2_8 >= 0.8 else 'FAIL'}.**  Pipeline ÷
-   same-window mp-control efficiency: the pipeline
-   {'retains' if med_rel_2_8 >= 0.8 else 'does not retain'} ≥0.8 of
-   whatever 4× process-level
-   scaling the silicon offered in that exact minute.  This is the
-   number the north rule can fairly ask of a job on this host.
-3. **Host ceiling, pinned by {len(ctl_stamped)} control-stamped runs:**
-   the mp control — no shuffle, no JVM, no Arrow; only fork +
-   parquet-read — itself medians **{med_ctl_2_8}** per-run
-   going 2→8 workers (same-window per-run ratios; >1 in a few
-   windows where the 8-worker minute was quieter than the 2-worker
-   minute — further proof the variance is the host's).  The raw
-   clean-window pipeline median ({med_clean_2_8} over
-   {len(clean_effs_2_8)} runs)
-   {'meets the 0.8 bar outright' if med_clean_2_8 >= 0.8 else
-    'sits below the 0.8 bar because the bar exceeds what the '
-    "silicon's own embarrassingly-parallel ceiling delivers in a "
-    'median window'}; the control-relative
-   figure (2) is the host-independent reading.
-
-Per-run details:
-
-- **N=2 → 4N=8: pipeline efficiency = {eff_2_8} best-window /
-  {med_2_8} median-window** (target ≥ 0.8 →
-  {"PASS" if result['pass'] else "FAIL"} on best) — same-window ratios
-  across recorded runs (per-run: {effs_2_8}); pairing levels from
-  *different* windows is not meaningful on this host.  The median shows
-  the PASS does not rest on one golden minute; the mp control's own
-  best-window ratio ({ctl_eff_2_8}) is the silicon ceiling the median
-  should be read against.
-- **Control adjudication of the 2→8 median** (each run carries its own
-  mp-control 2→8 efficiency — what the silicon delivered to an
-  embarrassingly-parallel pool in that exact window; per-run:
-  {ctl_effs_2_8}):
-  **median over control-clean runs (control within {CLEAN_BAND} of
-  linear): {med_clean_2_8} across {len(clean_effs_2_8)} runs;
-  median control-RELATIVE efficiency (pipeline ÷ control, all runs):
-  {med_rel_2_8}** — i.e. the pipeline retains that fraction of whatever
-  scaling the host actually offered.  A raw-median shortfall with a
-  control-relative median ≥ 0.8 localizes the loss in the host, not the
-  plan: the control has no shuffle, no JVM, no Arrow — only fork and
-  parquet-read — so any window that throttles it throttles ANY 4×
-  process-level parallelism the same way.
-- N=8 → 4N=32: pipeline {eff_8_32} best / {med_8_32} median (per-run:
-  {effs_8_32}); mp control {ctl_eff_8_32} — the shared-tenancy silicon
-  itself stops scaling past ~8 busy cores, so this ratio is a host
-  property, not a plan property.
-
-## Per-round bench normalization (bench.py noise control)
-
-`bench.py` runs K interleaved (mp-control, extract) pairs plus a closing
-control bracket: every extract run is flanked by a control on each side
-and normalized by the max of its two neighbors (a stolen minute usually
-depresses only one).  The JSON reports the legacy best-ratio
-`normalized_tp_over_control` (band continuity with rounds 1-4), the
-`normalized_median` of the per-pair ratios — the round-over-round
-comparable — and `normalized_spread` (max/min pair), which says whether
-this round's number is trustworthy at a glance.
-
-Control-clean gate (r7): a pair only counts toward a trusted
-full/best-window verdict if its normalizing control is within 2× of the
-session's best control sample.  A live r7 session showed why: the
-pre-session quiet probe passed, then a co-tenant spike depressed four
-consecutive controls 5× — the stolen pairs' ratios were mutually
-consistent (spread 1.47) because a depressed denominator inflates them
-all alike, and the ungated window rule adjudicated the spike itself
-(median 2.13 vs the 0.18-0.63 quiet band; the r5/r6 best-window medians
-2.56/2.41 are the same artifact and must not be band-compared with
-clean-gated medians).  When the latest control shows the host mid-spike,
-the self-extension now re-probes (bounded) for recovery before spending
-extra pairs, so extension evidence lands in quiet minutes.
-
-Caveat for reading the ratio across rounds: the mp control imports the
-CURRENT extraction core, so a core-level speedup moves numerator and
-denominator together — the ratio tracks the Spark layer's overhead share,
-not core speed.  Core-speed changes are evidenced by same-window A/B runs
-against the prior round's tree (r5 final, two 4-pair interleaved
-sessions: aria-off medians 1.29/1.36× with bests 1.36/1.51×; full-parity
-aria-on medians 1.36/1.46× with bests 1.41/1.71× — byte-identical
-outputs throughout).
-
-| run (local time) | pipeline turns/sec | control docs/sec | normalized | median-of-pairs | spread |
-| --- | --- | --- | --- | --- | --- |
-{bench_table}
-
-Reference band from the interleaved scaling runs at local[32]
-(tp÷ctl per history row): 0.18-0.23 typical in stolen windows; best
-recorded 0.63 (2026-08-17 golden window, 1967 turns/s).
-
-**r2→r3 swing adjudication (r4, 2026-08-16):** BENCH_r03's raw numbers
-looked 3-5× worse than BENCH_r02 on the identical corpus
-(extract 28.7s→143.6s).  The first control-instrumented run measured
-463.6 turns/s against a 2606.8 docs/s control — normalized 0.178, inside
-the recorded band — and every operator query returned to r2-like walls
-(simhash 4.3s vs r2 3.98/r3 11.7; near-dedup 4.1s vs 3.3/12.5) with no
-code change to those paths.  Conclusion: the r3 swing was host noise,
-not a regression; the control now makes that distinction measurable
-per-round instead of arguable.
-
-## Scale-up evidence (~10× corpus, no hidden quadratics)
-
-{scaleup_md}
-
-Design notes for real-cluster scaling: the job's only coordination is the
-one salt shuffle (hash(conv_id, turn_idx) → parallelism×4 buckets), which
-repartitions ~uniformly regardless of conversation skew; extraction is
-per-turn embarrassingly parallel; the metrics groupBy aggregates map-side.
-Nothing in the plan serializes with executor count.
-
-**Arrow batch retune (r6, tools/arrow_batch_ab.py — evidence in
-BENCH/arrow_ab_history.jsonl):** DEFAULT_ARROW_BATCH=64 re-validated
-after the r5 core speedup moved the compute/transfer balance.  Batch
-sizes 64/128/256 interleaved in ONE JVM over the bench corpus,
-normalized per-round against the same-round batch-64 run.  A
-fixed-order session (64 always first) read medians of 1.32×/1.80× for
-128/256 — an artifact: rotating the within-round order flipped it to
-0.83×/0.69×, and the quietest round's walls were 10.4 s / 11.5 s /
-13.0 s for 64/128/256.  64 rows stays: it is the largest batch the 2 MB
-python-worker socket buffer can hold whole, which is what preserves the
-feed/compute overlap.
-
-Wall-time decomposition (r5, interleaved best-of-3 at local[32], 29,797
-turns): scan+salt-shuffle 2.1 s → + Arrow round-trip through a
-pass-through pandas UDF 3.4 s → + full extraction 8.55 s (3,485 turns/s —
-best recorded window).  The extraction stage itself computes at the
-mp-pool ceiling; the whole residual normalized gap is scan/shuffle/Arrow
-infrastructure, which AMORTIZES at scale (fixed per-byte cost) rather
-than growing with document complexity.  Session tuning that
-mattered on the way here (kept in build_session): small Arrow batches
-(64 rows — a 200MB pass-through dropped 36s → 2.3s vs the 10000-row
-default), ParallelGC with a modest heap (G1 on 48g spent 765s in GC inside
-a 120s stage), links as parallel string arrays, extracted_html/aria opt-in.
-
-Reproduce: `python tools/scaling_bench.py` (regenerates this file).
-Single-config numbers: `python bench.py` (the driver's per-round entry).
-"""
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-    print(json.dumps(result))
-
-
-if __name__ == "__main__":
-    main()
