@@ -106,8 +106,10 @@ _MARKED_MS = frozenset({"if", "else", "endif"})
 # attrfind_tolerant's [^\s/>][^\s/=>]* with the lookbehind satisfied by the
 # mandatory preceding \s+
 _ATTR_NAME = r'[^\s=/>\'"<][^\s=/>]*'
+# the tag name must end where tagfind_tolerant's does: \s also matches \v,
+# \x1c-\x1f, \xa0 and other Unicode spaces, which stay inside its name
 _fast_start = re.compile(
-    r'<([a-zA-Z][a-zA-Z0-9]*)'
+    r'<([a-zA-Z][a-zA-Z0-9]*)(?=[\t\n\r\f />])'
     r'((?:\s+' + _ATTR_NAME + r'(?:\s*=\s*(?:\'[^\']*\'|"[^"]*"))?)*)'
     r'\s*(/?)>')
 _fast_attr = re.compile(

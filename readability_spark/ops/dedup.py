@@ -547,6 +547,11 @@ def _connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
                 "rep")
             .select("doc_id", F.col("rep2").alias("rep"))
             .localCheckpoint(eager=False))
+        # this count is the action that materializes new_labels' lazy
+        # checkpoint, but limit(1) may compute only a prefix of its
+        # partitions; correctness rests on LocalRDDCheckpointData, which
+        # runs a supplemental job over the uncomputed partitions before it
+        # marks the checkpoint done, so no later round reads a missing block
         changed = (new_labels.join(labels.withColumnRenamed("rep", "old"),
                                    "doc_id")
                    .filter(F.col("rep") != F.col("old")).limit(1).count())

@@ -14,10 +14,10 @@ Implements the north rule's scale requirements explicitly:
 - **AQE** handles post-shuffle coalescing and runtime skew splits on top.
 
 At 100 TB the same code holds: bucket count scales with cluster cores
-(4 buckets/core keeps task size uniform), the UDF is Arrow-batched with a
-bounded per-batch record count, and the only shuffle in the job is the one
-explicit salt repartition (the metrics groupBy aggregates partially map-side
-on a small column set).
+(4 buckets/core keeps task size uniform), the UDF is Arrow-batched with
+per-batch record-count and byte caps, and the only shuffle in the job is
+the one explicit salt repartition (the metrics groupBy aggregates
+partially map-side on a small column set).
 """
 
 from __future__ import annotations
@@ -45,6 +45,11 @@ from .udfs import extract_udf, make_extract_udf
 # rescan in workers (udfs.py), which cut the fixed cost of every task, so
 # the tuning may no longer hold.  A re-tune is decided by perfbench
 # parent/change pairs (perfbench/README.md) on both benchmark workloads.
+# Both caps apply to every scalar pandas-UDF and mapInPandas input batch: a
+# batch closes at 64 rows OR once it holds PYTHON_SOCKET_BUFFER bytes
+# (spark.sql.execution.arrow.maxBytesPerBatch, default 64 MiB), so a run of
+# whale payloads stages at most the cap plus one row in a python worker,
+# while the 64-row cap still decides the flagship (64 × ~4 KB ≪ 2 MiB).
 DEFAULT_ARROW_BATCH = 64
 PYTHON_SOCKET_BUFFER = 2 * 1024 * 1024
 
@@ -76,6 +81,8 @@ def build_session(app_name: str = "readability-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(PYTHON_SOCKET_BUFFER))
         .config("spark.buffer.size", str(PYTHON_SOCKET_BUFFER))
         # r8: InferFiltersFromGenerate clones each explode()'s child into
         # a pushed-down `size(child) > 0 AND isnotnull(child)` predicate;
@@ -110,8 +117,8 @@ def n_buckets_for(spark: SparkSession, factor: int = 4) -> int:
 def salt_col(num_buckets: int) -> Column:
     """bucket_id = pmod(xxhash64(conv_id, turn_idx), N) as int.
 
-    The one definition of the salt: batch, whale tier, dedup, resume and
-    streaming must agree on it, because the lineage table records buckets
+    The one definition of the salt: batch, dedup, resume and streaming
+    must agree on it, because the lineage table records buckets
     by this id and a resume anti-joins on it.
     """
     return F.pmod(F.xxhash64("conv_id", "turn_idx"),
@@ -129,59 +136,6 @@ def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
     return df.repartition(num_buckets, "bucket_id")
 
 
-# octet_length(NULL) is NULL, which would drop null-text rows from BOTH
-# byte tiers — a NULL payload sizes as 0 and stays in the light tier
-def _payload_size():
-    return F.coalesce(F.octet_length("text"), F.lit(0))
-
-
-def _whale_group_extract(df: DataFrame, pass_cols: list[str],
-                         group_keys: list[str], char_threshold: int,
-                         schema_src) -> DataFrame:
-    """Whale-tier extraction: singleton applyInPandas groups, where each
-    GROUP is the Arrow transfer unit — the python worker never stages
-    more than one whale (≤ MAX_HTML_BYTES) at a time.  ``pass_cols``
-    ride through unchanged (their StructFields come from ``schema_src``);
-    ``group_keys`` must make the groups singletons.  Shared by the salted
-    two-tier mode (grouped on (conv_id, turn_idx)) and the
-    content-addressed composition (grouped on the payload hash)."""
-    from pyspark.sql import types as T
-
-    from .schema import EXTRACT_SCHEMA
-    from .udfs import _FIELDS, _extract_record, _to_frame
-
-    out_schema = T.StructType(
-        [schema_src[c] for c in pass_cols] + list(EXTRACT_SCHEMA.fields))
-
-    def _extract_group(pdf):
-        out = _to_frame(
-            [_extract_record(t, char_threshold) for t in pdf["text"]],
-            _FIELDS)
-        for i, c in enumerate(pass_cols):
-            out.insert(i, c, pdf[c].values)
-        return out
-
-    return df.groupBy(*group_keys).applyInPandas(
-        _extract_group, schema=out_schema)
-
-
-def _tiered_distinct_extract(distinct: DataFrame, udf, whale_safe_bytes: int,
-                             char_threshold: int) -> DataFrame:
-    """Byte-tier the distinct-payload table: light rows keep the 64-row
-    scalar-UDF path; whale rows go through singleton applyInPandas groups
-    keyed on the payload hash (one whale per Arrow transfer unit).  Both
-    tiers read the same distinct lineage — the dropDuplicates/repartition
-    exchange is reused, and the whale groupBy('_tkey') is satisfied by the
-    _tkey hash partitioning the distinct table already carries."""
-    size = _payload_size()
-    light = distinct.filter(size < whale_safe_bytes) \
-        .withColumn("x", udf(F.col("text"))).select("_tkey", "x.*")
-    heavy = _whale_group_extract(
-        distinct.filter(size >= whale_safe_bytes), ["_tkey"], ["_tkey"],
-        char_threshold, distinct.schema)
-    return light.unionByName(heavy)
-
-
 def run_extraction(df: DataFrame, num_buckets: int | None = None,
                    char_threshold: int = 500,
                    whale_safe_bytes: int | None = None,
@@ -192,30 +146,12 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     Exchange(hash bucket_id) → ArrowEvalPython(extract_udf) → Project.
     One shuffle total; the scan only reads the 4 needed columns.
 
-    ``whale_safe_bytes``: Arrow input batches for a scalar pandas UDF are
-    sliced by RECORD COUNT only (Spark 4.1 honors maxBytesPerBatch solely in
-    the transformWithState serializers), so with the default 64-row batch a
-    pathological run of 8 MB-cap documents could stage a ~512 MB batch in
-    the python worker.  Setting this threshold splits extraction into two
-    tiers with HARD per-batch byte bounds:
-
-    - light rows (< threshold) keep the 64-row scalar-UDF path, bounding a
-      batch at 64×threshold bytes (64 MB at the 1 MB default threshold);
-    - whale rows are grouped by (conv_id, turn_idx) — singleton groups —
-      through applyInPandas, where each GROUP is the transfer unit, so the
-      worker never stages more than one whale (≤ MAX_HTML_BYTES) at a
-      time.  The whale tier shuffles only its own (rare) rows and skips
-      the salt exchange entirely (bucket_id rides along as a column; the
-      grouping exchange already randomizes placement).
-
-    Cost honesty: the size predicate is not expressible against parquet
-    footer stats, so the two tiers are two scans of the source.  This mode
-    is therefore OPT-IN for corpora where whales actually occur; the
-    default None keeps the measured single-tier / single-shuffle plan,
-    where whale damage is already capped by MAX_HTML_BYTES truncation.
-    (The single-scan alternative — persisting the salted exchange — trades
-    the rescan for materializing the full corpus in executor storage;
-    at 100 TB the rescan is the cheaper side of that trade.)
+    Whale payloads need no plan of their own: the session (build_session)
+    caps every Arrow input batch of the UDF at PYTHON_SOCKET_BUFFER bytes
+    as well as 64 rows, so a run of 8 MB-cap documents stages at most the
+    cap plus one document in a python worker, on this path, the dedup path
+    and the streaming one alike.  ``whale_safe_bytes`` is accepted for
+    compatibility and ignored; the plan is the same with or without it.
 
     ``dedup_payloads``: extraction is a pure function of the text, and
     real transcript corpora are duplicate-heavy (boilerplate pages,
@@ -235,17 +171,7 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     it overwhelmingly does.  The salt's skew job is done by
     hash-of-payload partitioning here; AQE splits any hot key.  Opt-in
     because a genuinely all-unique corpus pays ~2× shuffle for nothing.
-
-    COMPOSES with ``whale_safe_bytes`` — the two corpus pathologies
-    (duplicate-heavy AND whale-bearing) co-occur in real crawl data:
-    the distinct table is built first (collapsing repeated whales to
-    one row each), then the distinct RESIDUE is byte-tiered exactly as
-    above, with singleton applyInPandas groups keyed on the payload
-    hash.  Price of the composition: the light and whale tiers are two
-    passes over the distinct table's lineage (the dropDuplicates
-    exchange is reused across them), plus the whale tier's grouping —
-    which re-uses the _tkey hash partitioning the distinct table
-    already has, so whale rows pay no additional exchange.
+    Repeated whales collapse to one distinct row each before the UDF.
     """
     if num_buckets is None:
         num_buckets = n_buckets_for(df.sparkSession)
@@ -254,39 +180,19 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     if dedup_payloads:
         keyed = df.select(*cols, "text").withColumn(
             "_tkey", F.sha2(F.coalesce(F.col("text"), F.lit("")), 256))
-        distinct = (keyed.select("_tkey", "text")
-                    .dropDuplicates(["_tkey"])
-                    .repartition(num_buckets, "_tkey"))
-        if whale_safe_bytes is None:
-            extracted = distinct.withColumn("x", udf(F.col("text"))) \
-                .select("_tkey", "x.*")
-        else:
-            extracted = _tiered_distinct_extract(
-                distinct, udf, whale_safe_bytes, char_threshold)
+        extracted = (keyed.select("_tkey", "text")
+                     .dropDuplicates(["_tkey"])
+                     .repartition(num_buckets, "_tkey")
+                     .withColumn("x", udf(F.col("text")))
+                     .select("_tkey", "x.*"))
         return (
             keyed.withColumn("bucket_id", salt_col(num_buckets))
             .join(extracted, "_tkey")
             .select(*cols, "bucket_id",
                     *[f for f in extracted.columns if f != "_tkey"]))
     salted = salt_and_partition(df.select(*cols, "text"), num_buckets)
-    if whale_safe_bytes is None:
-        return salted.withColumn("x", udf(F.col("text"))).select(
-            *cols, "bucket_id", "x.*")
-
-    size = _payload_size()
-    light_out = salted.filter(size < whale_safe_bytes) \
-        .withColumn("x", udf(F.col("text"))).select(*cols, "bucket_id", "x.*")
-
-    # whale tier: no salt repartition (the groupBy exchange is the only
-    # shuffle these rows need); bucket_id is computed as a plain column so
-    # lineage/metrics stay uniform across tiers
-    heavy = (df.select(*cols, "text")
-             .filter(size >= whale_safe_bytes)
-             .withColumn("bucket_id", salt_col(num_buckets)))
-    heavy_out = _whale_group_extract(
-        heavy, [*cols, "bucket_id"], ["conv_id", "turn_idx"],
-        char_threshold, salted.schema)
-    return light_out.unionByName(heavy_out)
+    return salted.withColumn("x", udf(F.col("text"))).select(
+        *cols, "bucket_id", "x.*")
 
 
 def derive_metrics(results: DataFrame, attempt: int = 1,
@@ -386,6 +292,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     ``fmt`` is "parquet" here; on an Iceberg-catalog cluster pass
     ``fmt='iceberg'`` and table identifiers instead of paths — the plan is
     identical, Iceberg adds hidden-partition pruning on bucket(conv_id).
+    ``whale_safe_bytes`` is accepted and ignored, as in run_extraction.
     """
     df = spark.read.format(fmt).load(input_path)
     if num_buckets is None:
@@ -452,7 +359,6 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     # the copies are guaranteed to carry distinct attempts, so keep-max-
     # attempt per (conv_id, turn_idx) dedups them deterministically
     results = run_extraction(df, num_buckets, char_threshold,
-                             whale_safe_bytes=whale_safe_bytes,
                              dedup_payloads=dedup_payloads) \
         .withColumn("attempt", F.lit(attempt))
     results.persist(StorageLevel.MEMORY_AND_DISK)

@@ -129,6 +129,12 @@ ADVERSARIAL = [
     "<a" + " " * 60000,                        # giant space run
     "<" * 30000,                               # lt soup
     "<a " + 'k="v" ' * 3000 + ">done</a>",   # giant but terminated
+    # a tag name runs on through \s characters other than \t\n\r\f and
+    # space: the fast start-tag path must not split the name there
+    "<p\x0bclass=\"a\">vt after name</p>",
+    "<p\x1cid='z'>x1c after name</p>",
+    "<p\xa0id='z'>nbsp after name</p>",
+    "<x\x1f0< html=\"\"></x\x1f0<>",
 ]
 
 

@@ -1,27 +1,33 @@
 """Whale-doc (byte-aware) batching stress tests.
 
-The scalar-pandas-UDF path slices Arrow input batches by record count only
-(SURVEY §7.4 risk #4): 64 docs at the 8 MB truncation cap would stage a
-~512 MB batch in a python worker.  ``run_extraction(whale_safe_bytes=...)``
-routes rows ≥ the threshold through singleton applyInPandas groups — one
-whale per transfer unit, a hard byte bound — while light rows keep the
-measured 64-row scalar path.  These tests pin:
+Arrow input batches of the scalar pandas UDF are capped by bytes as well
+as rows: build_session sets spark.sql.execution.arrow.maxBytesPerBatch to
+PYTHON_SOCKET_BUFFER beside the 64-row maxRecordsPerBatch, so 64 docs at
+the 8 MB truncation cap can no longer stage a ~512 MB batch in a python
+worker (SURVEY §7.4 risk #4).  ``run_extraction(whale_safe_bytes=...)`` is
+a kept keyword that no longer changes the plan.  These tests pin:
 
-- result equality: two-tier output == single-tier output == plain function
+- result equality: output with the keyword == without == plain function
   (including the >MAX_HTML_BYTES truncation row and a NULL-text row);
-- plan shape: whale tier is FlatMapGroupsInPandas with ONLY its grouping
-  exchange (no salt repartition of whale rows), light tier keeps
-  ArrowEvalPython;
-- the end-to-end pipeline (write + metrics + resume) accepts the mode.
+- the byte cap: every batch a UDF or mapInPandas sees holds less than the
+  cap plus its largest row, on a corpus dense with whales;
+- plan shape: the keyword leaves the executed plan unchanged (one scan of
+  the source, no applyInPandas tier) on the salted and the dedup path;
+- the end-to-end pipeline (write + metrics + resume) accepts the keyword.
 """
 
 import os
+import re
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from readability_core import extract as extract_plain
 from readability_core.extract import MAX_HTML_BYTES
-from readability_spark.pipeline import run_extraction, run_pipeline
+from readability_spark.pipeline import (
+    PYTHON_SOCKET_BUFFER, run_extraction, run_pipeline)
 
 WHALE = ("<html><body><article>" +
          "<p>whale paragraph with enough text to score " + "x" * 4096 +
@@ -61,18 +67,6 @@ def test_two_tier_equals_single_tier_and_plain(spark, corpus):
         assert got["extracted_md"] == rec["extracted_md"]
         assert got["error"] == rec["error"]
     assert two[("convg", 7777)]["error"] == "truncated:max_html_bytes"
-
-
-def test_whale_plan_shape(spark, corpus):
-    out = run_extraction(corpus, num_buckets=8, whale_safe_bytes=100_000)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "ArrowEvalPython" in plan
-    # whale tier must NOT pay the salt repartition: the only
-    # REPARTITION_BY_NUM exchange in the plan belongs to the light tier
-    assert plan.count("REPARTITION_BY_NUM") == 1
-    # grouping key is (conv_id, turn_idx) → singleton groups
-    assert "FlatMapGroupsInPandas [conv_id" in plan
 
 
 def test_pipeline_whale_safe_end_to_end(spark, corpus, tmp_path):
@@ -116,9 +110,8 @@ def test_dedup_payloads_composes_with_whale_tiering(spark, corpus):
     """Duplicate-heavy AND whale-bearing corpora co-occur in real crawl
     data: dedup_payloads=True + whale_safe_bytes=N must (a) match the
     plain path row-for-row — the corpus repeats the same whale payload
-    ~9×, exercising the collapse-then-tier order — and (b) route the
-    distinct whale residue through singleton applyInPandas groups keyed
-    on the payload hash."""
+    ~9×, which the distinct table collapses to one row — and (b) keep the
+    dedup plan's shuffle count."""
     out = run_extraction(corpus, num_buckets=8, dedup_payloads=True,
                          whale_safe_bytes=100_000)
     composed = _by_key(out.collect())
@@ -128,17 +121,71 @@ def test_dedup_payloads_composes_with_whale_tiering(spark, corpus):
 
     # post-execution (AQE-final) plan: the collect above materialized it
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # whale tier: singleton groups on the payload hash
-    assert "FlatMapGroupsInPandas [_tkey" in plan
-    # light tier keeps the scalar Arrow path; records join back
+    # the distinct payloads take the scalar Arrow path; records join back
     assert "ArrowEvalPython" in plan
     assert "Join" in plan or "join" in plan
-    # scale shape: the two tiers SHARE the distinct table's shuffle stages
-    # (AQE stage-level reuse), and the whale groupBy('_tkey') is satisfied
-    # by the _tkey repartition — so the whole composed job materializes at
-    # most 3 distinct shuffles: dedup, repartition, and the record side of
-    # the join.  A 4th distinct stage would mean the whale tier re-paid
-    # the distinct lineage or its own exchange.
-    import re
+    # scale shape: the whole composed job materializes at most 3 distinct
+    # shuffles: dedup, repartition, and the record side of the join.  A
+    # 4th distinct stage would mean the distinct lineage was paid twice.
     stages = set(re.findall(r"ShuffleQueryStage (\d+)", plan))
     assert len(stages) <= 3, sorted(stages)
+
+
+def test_session_caps_every_arrow_batch_by_bytes(spark):
+    """A whale every 10th row (1.5 MB among 1 KiB rows): with only the
+    64-row cap a batch holds ~6 whales (~10 MB); the session's byte cap
+    closes a batch once it reaches PYTHON_SOCKET_BUFFER, so no batch
+    reaches the cap plus its largest row — for the scalar pandas UDF and
+    for mapInPandas alike."""
+    whale = 1_500_000
+    df = spark.range(0, 400, 1, 2).select(
+        F.when(F.col("id") % 10 == 0, F.repeat(F.lit("w"), whale))
+        .otherwise(F.repeat(F.lit("x"), 1024)).alias("text"))
+    bound = PYTHON_SOCKET_BUFFER + whale
+
+    # defined here so they pickle by value into the python workers
+    def text_bytes(s):
+        return sum(len(t.encode("utf-8")) for t in s if t is not None)
+
+    def batch_bytes(s):
+        return pd.Series([text_bytes(s)] * len(s), dtype="int64")
+
+    def per_batch(it):
+        for pdf in it:
+            yield pd.DataFrame({"b": [text_bytes(pdf["text"])]})
+
+    seen = df.select(pandas_udf(batch_bytes, "long")("text").alias("b")) \
+        .agg(F.max("b"), F.count("*")).first()
+    assert seen[1] == 400
+    assert 0 < seen[0] < bound, seen
+    sizes = [r["b"] for r in df.mapInPandas(per_batch, "b long").collect()]
+    assert max(sizes) < bound, sorted(sizes)
+
+
+@pytest.fixture(scope="module")
+def corpus_path(corpus, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("whale_corpus") / "input")
+    corpus.write.parquet(path)
+    return path
+
+
+def _plan_shape(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"(#|plan_id=)\d+L?", r"\1", plan)
+
+
+@pytest.mark.parametrize("dedup", [False, True], ids=["salted", "dedup"])
+def test_whale_safe_bytes_leaves_plan_unchanged(spark, corpus_path, dedup):
+    """The kept keyword is a no-op: the same executed plan with or without
+    it, no applyInPandas tier, and on the salted path one scan of the
+    source (the removed whale tier scanned it twice)."""
+    src = spark.read.parquet(corpus_path)
+    with_kw = _plan_shape(run_extraction(
+        src, num_buckets=8, whale_safe_bytes=100_000, dedup_payloads=dedup))
+    without = _plan_shape(run_extraction(
+        src, num_buckets=8, dedup_payloads=dedup))
+    assert with_kw == without
+    assert "FlatMapGroupsInPandas" not in with_kw
+    assert "ArrowEvalPython" in with_kw
+    if not dedup:
+        assert with_kw.count("FileScan parquet") == 1, with_kw
