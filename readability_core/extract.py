@@ -210,53 +210,17 @@ def extract_from_doc(doc: VDocument, error: Optional[str],
     extracted_html = to_html(root) if root is not None else ""
 
     # span offsets of the extracted root's raw text within the full document
-    # raw text (post-preprocess), for the per-turn span-equality invariant.
-    # ONE walk of the documentElement accumulates all three raw-text views
-    # (full doc, root subtree, body length) — identical strings to three
-    # independent extract_text_content walks since all use the same
-    # pre-order text concatenation; detached subtrees (ad pass can splice
-    # the body; root can live inside it) fall back to their own walk.
+    # raw text (post-preprocess), for the per-turn span-equality invariant;
+    # -1 when that text is empty or absent (a root the ad pass detached)
     span_start = span_end = -1
-    body_text_len = -1
     if root is not None:
-        full_parts: list[str] = []
-        root_parts: list[str] = []
-        root_seen = body_seen = False
-        body_len = 0
-        body_node = doc.body
-        # flags bit 1 = inside root subtree, bit 2 = inside body subtree
-        stack = [(c, 0) for c in reversed(doc.document_element.children)]
-        while stack:
-            node, fl = stack.pop()
-            if node.nodeType == "text":
-                t = node.text
-                full_parts.append(t)
-                if fl & 1:
-                    root_parts.append(t)
-                if fl & 2:
-                    body_len += len(t)
-                continue
-            if node is root:
-                fl |= 1
-                root_seen = True
-            if node is body_node:
-                fl |= 2
-                body_seen = True
-            children = node.children
-            if children:
-                stack += [(c, fl) for c in reversed(children)]
-        root_text = ("".join(root_parts) if root_seen
-                     else extract_text_content(root))
+        root_text = extract_text_content(root)
         if root_text:
-            idx = "".join(full_parts).find(root_text)
+            idx = extract_text_content(doc.document_element).find(root_text)
             if idx >= 0:
                 span_start = idx
                 span_end = idx + len(root_text)
-        if body_seen:
-            body_text_len = body_len
-
-    if body_text_len < 0:
-        body_text_len = len(extract_text_content(doc.body))
+    body_text_len = len(extract_text_content(doc.body))
 
     record = {
         "page_type": page_type,

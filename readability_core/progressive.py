@@ -4,7 +4,8 @@ Ports the mode chain of ``/root/reference/cli.js:194-436`` (tested by
 ``src/cli-progressive.test.ts``) as pure functions over an HTML string;
 ``progressive_dispatch`` mirrors the if/else ladder and returns the string
 the CLI would print.  On Spark these are cheap extra projections over the
-same parse (see readability_spark.udfs.make_extract_udf).
+same parse (readability_spark.udfs.make_extract_udf is the extraction
+UDF they would extend).
 
 Reference quirks preserved deliberately:
 

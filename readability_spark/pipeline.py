@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .udfs import extract_udf, make_extract_udf
+from .udfs import make_extract_udf
 
 # Arrow rows/batch. Small batches matter enormously for UDF throughput:
 # with ~30KB HTML payloads, the default 10000-row batches serialize the
@@ -57,7 +57,6 @@ PYTHON_SOCKET_BUFFER = 2 * 1024 * 1024
 def build_session(app_name: str = "readability-spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
-                  arrow_batch: int = DEFAULT_ARROW_BATCH,
                   driver_memory: str | None = None) -> SparkSession:
     """Session with the configs the pipeline relies on (AQE + Arrow).
 
@@ -80,7 +79,7 @@ def build_session(app_name: str = "readability-spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch))
+                str(DEFAULT_ARROW_BATCH))
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(PYTHON_SOCKET_BUFFER))
         .config("spark.buffer.size", str(PYTHON_SOCKET_BUFFER))
@@ -105,13 +104,13 @@ def build_session(app_name: str = "readability-spark",
     return b.getOrCreate()
 
 
-def n_buckets_for(spark: SparkSession, factor: int = 4) -> int:
+def n_buckets_for(spark: SparkSession) -> int:
     """Salt-bucket count: ~4× parallelism keeps tasks uniform under skew.
 
-    The factor was chosen while every task still paid ~0.25 s of worker
-    set-up (the zip-archive rescan udfs.py removes); with cheaper tasks a
-    different factor may win, which only a measured A/B should decide."""
-    return max(1, spark.sparkContext.defaultParallelism * factor)
+    The 4 was chosen while every task still paid ~0.25 s of worker set-up
+    (the zip-archive rescan udfs.py removes); with cheaper tasks a
+    different multiple may win, which only a measured A/B should decide."""
+    return max(1, spark.sparkContext.defaultParallelism * 4)
 
 
 def salt_col(num_buckets: int) -> Column:
@@ -175,7 +174,7 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     """
     if num_buckets is None:
         num_buckets = n_buckets_for(df.sparkSession)
-    udf = extract_udf if char_threshold == 500 else make_extract_udf(char_threshold)
+    udf = make_extract_udf(char_threshold)
     cols = [c for c in ("conv_id", "turn_idx", "role") if c in df.columns]
     if dedup_payloads:
         keyed = df.select(*cols, "text").withColumn(

@@ -125,8 +125,8 @@ def test_arbitrary_text_payloads(text):
 @given(html_soup())
 def test_span_offsets_slice_to_root_text(html):
     """When spans are reported, full_doc_text[span_start:span_end] must be
-    exactly the root subtree's raw text — validates the fused single-walk
-    accumulation in extract_from_doc against the independent traversal."""
+    exactly the root subtree's raw text — validates extract_from_doc's span
+    search against independent traversals of the same tree."""
     from readability_core.extract import extract_full
     from readability_core.render import extract_text_content
 

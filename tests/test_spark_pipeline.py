@@ -77,6 +77,79 @@ def test_udf_full_parity_with_aria_on_sample(spark, fixture_turns):
         assert row["aria_node_count"] == exp["aria_node_count"], row["conv_id"]
 
 
+def _link_heavy_page(k):
+    """12·k chars of text beside 32 links: 'other' at the library's
+    charThreshold 500 (many links, little text), 'article' at 100."""
+    links = "".join(f'<li><a href="/p{i}">p{i}</a></li>' for i in range(32))
+    return (f"<html><body><div><p>{'Some words, ' * k}</p></div>"
+            f"<ul>{links}</ul></body></html>")
+
+
+def _assert_equals_core(rows, texts, **kw):
+    """Every EXTRACT_SCHEMA field equals core extract() (links as the two
+    parallel arrays)."""
+    from readability_spark.schema import EXTRACT_SCHEMA
+
+    assert len(rows) == len(texts)
+    for row in rows:
+        key = (row["conv_id"], row["turn_idx"])
+        exp = plain_extract(texts[key], **kw)
+        exp["link_hrefs"] = [l["href"] for l in exp["links"]]
+        exp["link_texts"] = [l["text"] for l in exp["links"]]
+        for f in EXTRACT_SCHEMA.fieldNames():
+            assert row[f] == exp[f], (key, f)
+
+
+def test_udfs_equal_plain_function_on_generated_turns(spark):
+    """extract_udf, the ARIA-on UDF and a non-default charThreshold through
+    run_extraction ≡ the pure-Python core, field for field, over ~170
+    fixture-free turns (no reference corpus needed) plus three pages whose
+    page_type depends on char_threshold."""
+    from readability_spark.udfs import make_extract_udf
+
+    rows = [r[:4] for r in generate_rows(20, 1, use_fixtures=False)]
+    rows += [("conv_thr", k, "tool", _link_heavy_page(k))
+             for k in (14, 24, 40)]
+    texts = {(r[0], r[1]): r[3] for r in rows}
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    ).repartition(4)
+    got = df.select("conv_id", "turn_idx",
+                    extract_udf("text").alias("x"),
+                    make_extract_udf(include_aria=True)("text").alias("a")
+                    ).collect()
+    _assert_equals_core([r["x"].asDict() | r.asDict() for r in got], texts,
+                        build_aria=False)
+    _assert_equals_core([r["a"].asDict() | r.asDict() for r in got], texts,
+                        build_aria=True)
+    assert any(r["a"]["aria_tree"] for r in got)
+
+    low = run_extraction(df, 4, char_threshold=100).collect()
+    _assert_equals_core(low, texts, char_threshold=100, build_aria=False)
+    default = {(r["conv_id"], r["turn_idx"]): r["x"]["page_type"]
+               for r in got}
+    assert any(r["page_type"] != default[(r["conv_id"], r["turn_idx"])]
+               for r in low)
+
+
+def test_extract_record_fallback_carries_every_field(monkeypatch):
+    """One row raising inside the core yields a full EXTRACT_SCHEMA record
+    marked exception:<Type>, and the batch frame still builds."""
+    from readability_spark import udfs
+    from readability_spark.schema import EXTRACT_SCHEMA
+
+    def boom(*a, **kw):
+        raise ValueError("boom")
+
+    monkeypatch.setattr(udfs, "_extract_one", boom)
+    rec = udfs._extract_record("<p>x</p>")
+    assert set(EXTRACT_SCHEMA.fieldNames()) <= set(rec)
+    assert rec["error"] == "exception:ValueError"
+    frame = udfs._to_frame([rec], udfs._FIELDS)
+    assert list(frame.columns) == EXTRACT_SCHEMA.fieldNames()
+    assert len(frame) == 1
+
+
 def test_sql_registered_udf_surface(spark):
     """SQL users can call the engine directly (SURVEY.md §2.13)."""
     from readability_spark.udfs import register_udfs
@@ -139,8 +212,13 @@ def test_warning_only_bucket_is_ok_not_failed(spark):
          (1, "other", "exception:X", 0, 0, 0.0, "c2")],
         "bucket_id int, page_type string, error string, node_count int, "
         "char_yield int, top_score double, conv_id string")
-    m = {r["bucket_id"]: r for r in
-         derive_metrics(results, attempt=1, num_buckets=4).collect()}
+    metrics = derive_metrics(results, attempt=1, num_buckets=4)
+    # derive_metrics is the one definition of the lineage row
+    assert metrics.columns == [
+        "bucket_id", "n_turns", "n_articles", "n_errors", "n_warnings",
+        "sum_node_count", "sum_char_yield", "avg_top_score", "conv_id_min",
+        "conv_id_max", "status", "attempt", "n_buckets"]
+    m = {r["bucket_id"]: r for r in metrics.collect()}
     assert m[0]["status"] == "ok"
     assert m[0]["n_errors"] == 0 and m[0]["n_warnings"] == 2
     assert m[1]["status"] == "failed"
