@@ -142,8 +142,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str,
     )
 
 
-def bpe_encode(spark: SparkSession, sf_dir: str,
-               rounds: int = BPE_ROUNDS) -> DataFrame:
+def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus under the learned merges: per document, word
     count, subword-token count, character count, and the chars-per-
     subword compression the vocabulary buys.
@@ -156,7 +155,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str,
     vocabulary outgrows it), then aggregates per doc — the lm_score
     shape: no corpus-sized exchange ever carries token text.
     """
-    _, words = _train(spark, sf_dir, rounds)
+    _, words = _train(spark, sf_dir, BPE_ROUNDS)
     vocab = words.select(
         "tok",
         F.expr("size(array_remove(split(ws, '  '), ''))")
@@ -230,13 +229,13 @@ def _bpe_sql(rounds: int = BPE_ROUNDS) -> str:
     return _bpe_train_ctes(rounds) + f"\n{union}\nORDER BY merge_round\n"
 
 
-def _bpe_encode_sql(rounds: int = BPE_ROUNDS) -> str:
-    return _bpe_train_ctes(rounds) + f""", vocab AS (
+def _bpe_encode_sql() -> str:
+    return _bpe_train_ctes(BPE_ROUNDS) + f""", vocab AS (
   SELECT tok,
          CAST(len(list_filter(string_split(ws, '  '), x -> x <> ''))
               AS BIGINT) AS n_sub,
          CAST(len(tok) AS BIGINT) AS n_chr
-  FROM w{rounds}
+  FROM w{BPE_ROUNDS}
 ), agg AS (
   SELECT doc_id,
          CAST(count(*) AS BIGINT) AS n_words,

@@ -65,7 +65,7 @@ def md5_prefix_int_expr(col: str, nhex: int = 8, start: int = 1) -> str:
     """Spark SQL: ``nhex`` hex digits of md5(col) from 1-based offset
     ``start`` as a bigint.
 
-    Written with instr() arithmetic (not conv()) so the DuckDB mirror is
+    Written with instr() arithmetic (not conv()) so the DuckDB oracles use
     literally the same expression.  Disjoint ``start`` offsets over the
     32-digit md5 give independent-enough integers for multi-hash schemes
     (Bloom positions, banded signatures) without a second hash invocation.
@@ -77,11 +77,6 @@ def md5_prefix_int_expr(col: str, nhex: int = 8, start: int = 1) -> str:
     return f"({terms})"
 
 
-def md5_prefix_int_sql(col: str, nhex: int = 8, start: int = 1) -> str:
-    """DuckDB mirror of md5_prefix_int_expr (identical by construction)."""
-    return md5_prefix_int_expr(col, nhex, start)
-
-
 def md5_prefix_int_fast_expr(col: str, nhex: int = 8, start: int = 1) -> str:
     """Spark-side fast form of ``md5_prefix_int_expr``: the same bigint
     (value-identical — one base-16 parse of the hex slice vs the spelled-
@@ -89,7 +84,7 @@ def md5_prefix_int_fast_expr(col: str, nhex: int = 8, start: int = 1) -> str:
     shingle set) via ONE substr + conv instead of ``nhex`` substr+instr
     terms.  ``nhex`` must stay ≤ 15 so the unsigned parse fits a bigint
     exactly (8 at every call site).  The DuckDB oracle text stays on
-    ``md5_prefix_int_sql``'s instr chain: oracle SQL is fingerprint-frozen
+    ``md5_prefix_int_expr``'s instr chain: oracle SQL is fingerprint-frozen
     and only VALUES need to match across engines."""
     if nhex > 15:
         raise ValueError(
@@ -98,14 +93,14 @@ def md5_prefix_int_fast_expr(col: str, nhex: int = 8, start: int = 1) -> str:
             f"as bigint)")
 
 
-def ngram_zip_parts(n: int, arr: str = "toks",
-                    z: str = "z") -> tuple[str, str, str]:
-    """The r8 zip-explode n-gram builder: returns (zip_expr, gram_expr,
-    last_field) where ``explode(zip_expr)`` yields one struct per array
-    position, ``last_field IS NOT NULL`` keeps exactly the positions
-    1..len-n+1 (tokens are never NULL, so a NULL shifted field marks
-    off-the-end only), and ``gram_expr`` rebuilds the identical
-    space-joined n-gram string codegen-side.
+def ngram_zip_parts(n: int) -> tuple[str, str, str]:
+    """The r8 zip-explode n-gram builder over the ``toks`` array column:
+    returns (zip_expr, gram_expr, last_field) where ``explode(zip_expr)``,
+    aliased ``z``, yields one struct per array position, ``last_field IS
+    NOT NULL`` keeps exactly the positions 1..len-n+1 (tokens are never
+    NULL, so a NULL shifted field marks off-the-end only), and
+    ``gram_expr`` rebuilds the identical space-joined n-gram string
+    codegen-side.
 
     Replaces the interpreted ``transform(sequence(...), i ->
     array_join(slice(arr, i, n), ' '))`` lambda (the r6-late idiom):
@@ -114,9 +109,9 @@ def ngram_zip_parts(n: int, arr: str = "toks",
     ``size(arr) >= n`` pre-filters redundant — short arrays simply emit
     no complete-gram rows — so callers drop them, removing a cloned
     tokenize from the pushed-down scan filter."""
-    parts = [arr] + [f"slice({arr}, {j + 1}, size({arr}))"
-                     for j in range(1, n)]
-    fields = [f"{z}.{arr}"] + [f"{z}.`{j}`" for j in range(1, n)]
+    parts = ["toks"] + [f"slice(toks, {j + 1}, size(toks))"
+                        for j in range(1, n)]
+    fields = ["z.toks"] + [f"z.`{j}`" for j in range(1, n)]
     return (f"arrays_zip({', '.join(parts)})",
             f"concat_ws(' ', {', '.join(fields)})",
             fields[-1])

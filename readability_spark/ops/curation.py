@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (SQL_TOKENS, md5_prefix_int_fast_expr,
-                     md5_prefix_int_sql, ngram_zip_parts, table, tokens_col)
+from .common import (SQL_TOKENS, md5_prefix_int_expr,
+                     md5_prefix_int_fast_expr, ngram_zip_parts, table,
+                     tokens_col)
 
 # --- PII detection / redaction -----------------------------------------------
 #
@@ -132,7 +133,7 @@ _BENCH_PRED = ("substr(md5(concat('bench|', CAST(doc_id AS STRING))), 1, 1)"
 DECON_FLAG_FRAC = 0.2
 
 
-def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+def _gram_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, is_bench, gram): one row per n-gram position.
 
     Shared gram builder for the exact and Bloom decontamination legs —
@@ -146,7 +147,7 @@ def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     them, so the predicate was redundant — and it cost a full cloned
     tokenize in the pushed-down scan filter.
     """
-    zip_expr, gram_expr, last = ngram_zip_parts(n)
+    zip_expr, gram_expr, last = ngram_zip_parts(DECON_N)
     return (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_BENCH_PRED).alias("is_bench"),
@@ -157,15 +158,14 @@ def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     )
 
 
-def decontaminate(spark: SparkSession, sf_dir: str,
-                  n: int = DECON_N) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-candidate-document benchmark n-gram overlap + flag.
 
     ``n_contaminated`` counts gram POSITIONS (not distinct grams) whose
     gram appears anywhere in the benchmark set — the fraction of the
     document covered by benchmark text, which is the filter criterion.
     """
-    g = _gram_rows(spark, sf_dir, n)
+    g = _gram_rows(spark, sf_dir)
     bench = (g.filter("is_bench")
              .select("gram").distinct()
              .withColumn("hit", F.lit(1)))
@@ -188,19 +188,19 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     )
 
 
-def _decon_sql(n: int = DECON_N) -> str:
+def _decon_sql() -> str:
     gram = "concat(" + ", ' ', ".join(
-        "tok" if j == 0 else f"t{j}" for j in range(n)) + ")"
+        "tok" if j == 0 else f"t{j}" for j in range(DECON_N)) + ")"
     leads = ",\n         ".join(
         f"lead(tok, {j}) OVER (PARTITION BY doc_id ORDER BY pos) AS t{j}"
-        for j in range(1, n))
+        for j in range(1, DECON_N))
     return f"""
 WITH t AS (
   SELECT doc_id, {SQL_TOKENS.format(col='text')} AS toks FROM documents
 ), d AS (
   SELECT doc_id, toks, len(toks) AS n_tokens,
          {_BENCH_PRED} AS is_bench
-  FROM t WHERE len(toks) >= {n}
+  FROM t WHERE len(toks) >= {DECON_N}
 ), p AS (
   SELECT doc_id, is_bench, toks[i] AS tok, i - 1 AS pos
   FROM (SELECT doc_id, is_bench, toks,
@@ -211,7 +211,7 @@ WITH t AS (
   FROM p
 ), grams AS (
   SELECT doc_id, is_bench, {gram} AS gram
-  FROM g WHERE t{n - 1} IS NOT NULL
+  FROM g WHERE t{DECON_N - 1} IS NOT NULL
 ), bench AS (
   SELECT DISTINCT gram FROM grams WHERE is_bench
 ), agg AS (
@@ -271,19 +271,18 @@ _BLOOM_POS = [
     for j in range(BLOOM_K)
 ]
 _BLOOM_POS_SQL = [
-    (lambda col, j=j: f"({md5_prefix_int_sql(col, 8, 1 + 8 * j)}"
+    (lambda col, j=j: f"({md5_prefix_int_expr(col, 8, 1 + 8 * j)}"
                       f" % {BLOOM_M})")
     for j in range(BLOOM_K)
 ]
 
 
-def decontaminate_bloom(spark: SparkSession, sf_dir: str,
-                        n: int = DECON_N) -> DataFrame:
+def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter benchmark-overlap screen: per candidate document, the
     count of gram positions whose BLOOM_K md5-derived bits are ALL set in
     the filter built from the benchmark grams (superset of the exact
     contaminated count), plus the flag at the same threshold."""
-    g = _gram_rows(spark, sf_dir, n)
+    g = _gram_rows(spark, sf_dir)
     # materialized ONCE: the bits table is broadcast BLOOM_K times, and
     # without the checkpoint each broadcast replays the benchmark scan +
     # gram distinct + position distinct (observed: 3x scans/exchanges)
@@ -324,12 +323,12 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str,
     )
 
 
-def _decon_bloom_sql(n: int = DECON_N) -> str:
+def _decon_bloom_sql() -> str:
     gram = "concat(" + ", ' ', ".join(
-        "tok" if j == 0 else f"t{j}" for j in range(n)) + ")"
+        "tok" if j == 0 else f"t{j}" for j in range(DECON_N)) + ")"
     leads = ",\n         ".join(
         f"lead(tok, {j}) OVER (PARTITION BY doc_id ORDER BY pos) AS t{j}"
-        for j in range(1, n))
+        for j in range(1, DECON_N))
     pos_list = ", ".join(p("gram") for p in _BLOOM_POS_SQL)
     probes = ",\n         ".join(
         p("gram") + f" AS p{j}" for j, p in enumerate(_BLOOM_POS_SQL))
@@ -343,7 +342,7 @@ WITH t AS (
 ), d AS (
   SELECT doc_id, toks, len(toks) AS n_tokens,
          {_BENCH_PRED} AS is_bench
-  FROM t WHERE len(toks) >= {n}
+  FROM t WHERE len(toks) >= {DECON_N}
 ), p AS (
   SELECT doc_id, is_bench, toks[i] AS tok, i - 1 AS pos
   FROM (SELECT doc_id, is_bench, toks,
@@ -354,7 +353,7 @@ WITH t AS (
   FROM p
 ), grams AS MATERIALIZED (
   SELECT doc_id, is_bench, {gram} AS gram
-  FROM g WHERE t{n - 1} IS NOT NULL
+  FROM g WHERE t{DECON_N - 1} IS NOT NULL
 ), bits AS MATERIALIZED (
   SELECT DISTINCT unnest([{pos_list}]) AS pos
   FROM (SELECT DISTINCT gram FROM grams WHERE is_bench)
@@ -412,9 +411,8 @@ _DSIR_TARGET = ("substr(md5(concat('dsir|', CAST(doc_id AS STRING))), 1, 1)"
                 " IN ('0', '1', '2', '3')")
 
 
-def dsir_select(spark: SparkSession, sf_dir: str,
-                k: int = DSIR_K) -> DataFrame:
-    """Top-k candidate documents by hashed-unigram importance weight
+def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-DSIR_K candidate documents by hashed-unigram importance weight
     (average per-token bucket weight, doc_id tiebreak)."""
     # r8: conv() fast md5-int (value-identical; oracle text unchanged);
     # the len >= 1 pre-filter was redundant — token-less docs emit no
@@ -457,7 +455,7 @@ def dsir_select(spark: SparkSession, sf_dir: str,
     # a minimal plan).  The rank window then runs over k rows only.
     win = Window.orderBy(F.desc("avg_weight"), F.asc("doc_id"))
     return (
-        scored.orderBy(F.desc("avg_weight"), F.asc("doc_id")).limit(k)
+        scored.orderBy(F.desc("avg_weight"), F.asc("doc_id")).limit(DSIR_K)
         .withColumn("sel_rank", F.row_number().over(win).cast("long"))
         .select("sel_rank", "doc_id", "n_tokens", "score", "avg_weight")
         .orderBy("sel_rank")
@@ -474,7 +472,7 @@ WITH t AS (
   SELECT doc_id, is_target, unnest(toks) AS tok FROM d
 ), dbc AS (
   SELECT doc_id, is_target,
-         ({md5_prefix_int_sql('tok')} % {DSIR_BUCKETS}) AS b,
+         ({md5_prefix_int_expr('tok')} % {DSIR_BUCKETS}) AS b,
          count(*) AS c
   FROM p GROUP BY doc_id, is_target, b
 ), wb AS (

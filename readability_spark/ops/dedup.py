@@ -121,7 +121,6 @@ _MH_PARAMS = [
     (22695477, 1), (69069, 362437), (1664525, 1013904223),
     (48271, 11), (16807, 7),
 ]
-N_MINHASH = len(_MH_PARAMS)
 LSH_BANDS = 4  # 2 minhashes per band
 
 
@@ -564,8 +563,7 @@ def _connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str,
-                   pairs: DataFrame | None = None,
-                   checkpoint_dir: str | None = None) -> DataFrame:
+                   pairs: DataFrame | None = None) -> DataFrame:
     """Resolve near-dup pairs into clusters and pick keepers — the step a
     real 100 TB dedup pipeline actually executes after pair generation
     (exact_dedup picks keepers via min(doc_id); this is the near-dup twin).
@@ -584,8 +582,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     ``pairs`` lets a staged pipeline hand in the pair table the previous
     stage already produced (``near_dedup``'s output, or anything with
     doc_a/doc_b and optionally is_dup) instead of recomputing near_dedup
-    from scratch inside this operator — pairs → clusters share the
-    artifact ``checkpoint_dir`` makes durable.
+    from scratch inside this operator.  The durable form is
+    ``near_dedup(checkpoint_dir=...)`` feeding ``pairs=``: the pair table
+    survives a crash and clusters re-derive from it.
 
     THE PRODUCTION SHAPE IS THE STAGED ONE: a real pipeline materializes
     near_dedup's pair table once (it is also what you audit before
@@ -603,7 +602,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     pair are their own representative, keep = (doc_id == rep_id).
     """
     if pairs is None:
-        pairs = near_dedup(spark, sf_dir, checkpoint_dir)
+        pairs = near_dedup(spark, sf_dir)
     dup = pairs.filter(F.col("is_dup")) if "is_dup" in pairs.columns \
         else pairs
     labels, n_rounds = _connected_components(dup.select("doc_a", "doc_b"))

@@ -22,18 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),          # image | audio | video
-    T.StructField("payload", T.BinaryType()),       # opaque encoded bytes
-    T.StructField("meta", T.StructType([
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ])),
-])
-
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),
@@ -46,6 +34,7 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 _FEATURE_DIM = 8
+_MEDIA_LIMIT = 64
 
 
 def decode_real(payload: bytes, mime: str):
@@ -65,7 +54,7 @@ def decode_stub(payload: bytes) -> list[float]:
     return [d[i] / 255.0 for i in range(_FEATURE_DIM)]
 
 
-def synth_media(spark: SparkSession, sf_dir: str, limit: int = 64) -> DataFrame:
+def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a media table from documents (payload = utf-8 bytes of the
     text — an opaque blob as far as the pipeline is concerned).
 
@@ -73,7 +62,7 @@ def synth_media(spark: SparkSession, sf_dir: str, limit: int = 64) -> DataFrame:
     through one partition and picks nondeterministic rows; the filter is
     deterministic and pushes down to the scan."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .filter(F.col("doc_id") < limit))
+            .filter(F.col("doc_id") < _MEDIA_LIMIT))
     kinds = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (F.col("doc_id") % 3 + 1).cast("int"))
@@ -133,7 +122,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _media_features_sql(limit: int = 64) -> str:
+def _media_features_sql() -> str:
     from .common import HEX
 
     def byte_expr(i: int) -> str:
@@ -151,7 +140,7 @@ SELECT doc_id AS media_id,
        (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
        CAST(strlen(coalesce(text, '')) AS INTEGER) AS n_bytes,
        {csv} AS feature_csv
-FROM documents WHERE doc_id < {limit} ORDER BY media_id
+FROM documents WHERE doc_id < {_MEDIA_LIMIT} ORDER BY media_id
 """
 
 
@@ -191,8 +180,7 @@ def _le_hex(expr: str, nbytes: int) -> str:
     return f"concat({pairs})"
 
 
-def synth_container_media(spark: SparkSession, sf_dir: str,
-                          limit: int = _HDR_LIMIT) -> DataFrame:
+def synth_container_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, payload) with REAL container bytes, built entirely
     JVM-side: doc_id%4 → PNG / GIF89a / canonical WAV / garbage."""
     w = "((doc_id % 640) + 1)"
@@ -217,7 +205,7 @@ def synth_container_media(spark: SparkSession, sf_dir: str,
                    f"when doc_id % 4 = 2 then {wav} "
                    f"else {garbage} end")
     return (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .filter(F.col("doc_id") < limit)
+            .filter(F.col("doc_id") < _HDR_LIMIT)
             .select(F.col("doc_id").alias("media_id"),
                     F.expr(f"unhex({payload_hex})").alias("payload")))
 
@@ -278,7 +266,7 @@ def media_header_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("media_id"))
 
 
-def _media_header_meta_sql(limit: int = _HDR_LIMIT) -> str:
+def _media_header_meta_sql() -> str:
     """Closed-form oracle: the parser must exactly invert the synth.
     Integer math mirrors Python's floor division (all operands
     positive)."""
@@ -301,7 +289,7 @@ SELECT doc_id AS media_id,
                           * (1 + doc_id % 2) * 2) AS INTEGER)
             END AS duration_ms,
        doc_id % 4 <> 3 AS parse_ok
-FROM documents WHERE doc_id < {limit} ORDER BY media_id
+FROM documents WHERE doc_id < {_HDR_LIMIT} ORDER BY media_id
 """
 
 

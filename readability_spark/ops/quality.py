@@ -142,8 +142,7 @@ ORDER BY bi.doc_id
 CHUNK_TOKENS = 4
 
 
-def chunk_dedup(spark: SparkSession, sf_dir: str,
-                chunk_tokens: int = CHUNK_TOKENS) -> DataFrame:
+def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fraction of each document's token chunks that appear verbatim in at
     least one OTHER document (md5 chunk identity, hash-only shuffle).
 
@@ -156,7 +155,7 @@ def chunk_dedup(spark: SparkSession, sf_dir: str,
     predicate guard as repeated_substr: the if() keeps the descending-
     sequence hazard off rows the length filter drops.
     """
-    k = chunk_tokens
+    k = CHUNK_TOKENS
     # r8: no n_tokens >= k pre-filter — the if() guard already yields an
     # empty chunk array for short docs (no rows after explode, so the
     # per-doc output is unchanged), and the pushed-down filter cost a
@@ -244,8 +243,7 @@ ORDER BY c.doc_id
 # CCNet's "first seen in shard order".
 
 
-def line_dedup(spark: SparkSession, sf_dir: str,
-               chunk_tokens: int = CHUNK_TOKENS) -> DataFrame:
+def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first chunk dedup with rewrite: per document, how many chunks
     survive, and the md5 of the text rebuilt from surviving chunks.
 
@@ -257,7 +255,7 @@ def line_dedup(spark: SparkSession, sf_dir: str,
     Ragged tails participate (a short final chunk is a real line), unlike
     chunk_dedup's detection-only framing which drops them.
     """
-    k = chunk_tokens
+    k = CHUNK_TOKENS
     docs = (
         table(spark, sf_dir, "documents")
         .select("doc_id", tokens_col("text").alias("toks"))
@@ -352,8 +350,7 @@ SUBSTR_K = 5
 SUBSTR_FLAG_FRAC = 0.2
 
 
-def repeated_substr(spark: SparkSession, sf_dir: str,
-                    k: int = SUBSTR_K) -> DataFrame:
+def repeated_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repeated-substring statistics: repeated window
     positions, merged span count, covered-token count/fraction, flag.
 
@@ -365,6 +362,7 @@ def repeated_substr(spark: SparkSession, sf_dir: str,
     guard as decontaminate: the if() keeps the descending-sequence /
     ANSI-index hazard off rows the length filter drops.
     """
+    k = SUBSTR_K
     docs = (
         table(spark, sf_dir, "documents")
         .select("doc_id", tokens_col("text").alias("toks"))
@@ -504,12 +502,12 @@ ORDER BY lang, sample_rank
 TOP_TERMS_K = 3
 
 
-def top_terms(spark: SparkSession, sf_dir: str,
-              k: int = TOP_TERMS_K) -> DataFrame:
-    """Top-k distinctive terms per document by (tf DESC, df ASC, term ASC)
-    — the integer-exact rank form of tf-idf (higher tf, rarer corpus-wide,
-    lexicographic tiebreak).  The document-frequency table is a vocabulary
-    aggregate (tiny relative to the corpus) and is broadcast."""
+def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-TOP_TERMS_K distinctive terms per document by (tf DESC, df ASC,
+    term ASC) — the integer-exact rank form of tf-idf (higher tf, rarer
+    corpus-wide, lexicographic tiebreak).  The document-frequency table is
+    a vocabulary aggregate (tiny relative to the corpus) and is
+    broadcast."""
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens_col("text")).alias("tok"))
     # tf feeds both the vocabulary aggregate and the join; materialize it
@@ -523,7 +521,7 @@ def top_terms(spark: SparkSession, sf_dir: str,
     return (
         tf.join(F.broadcast(df), "tok")
         .withColumn("term_rank", F.row_number().over(w))
-        .filter(F.col("term_rank") <= k)
+        .filter(F.col("term_rank") <= TOP_TERMS_K)
         .select("doc_id", "term_rank", F.col("tok").alias("term"),
                 "tf", "df")
         .orderBy("doc_id", "term_rank")

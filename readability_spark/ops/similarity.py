@@ -28,8 +28,8 @@ from .common import table
 
 N_QUERIES = 5
 TOP_K = 5
-EMB_DIM = 64   # testdata embeddings width; operators take dim= to override —
-               # no driver-side .first() probe (that would collect at scale)
+EMB_DIM = 64   # testdata embeddings width, fixed in both engines — no
+               # driver-side .first() probe (that would collect at scale)
 
 _DOT = ("aggregate(zip_with(a, b, (x, y) -> cast(x as double) * "
         "cast(y as double)), 0D, (acc, v) -> acc + v)")
@@ -95,6 +95,21 @@ def _cos_sql(x: str, y: str, dim: int) -> str:
             f"sqrt({_dot_chain_sql(y, y, dim)})))")
 
 
+def _dim_guard(expr: str) -> str:
+    """``expr`` when the row's embedding is at least EMB_DIM wide, else a
+    loud failure: out-of-range v[i] is NULL (ANSI off), which would
+    silently collapse every vector into bucket 0 or NULL-pad every cosine
+    it touches.  The guard lives INSIDE the projected expression so
+    column pruning can't drop it."""
+    return (f"if(size(embedding) >= {EMB_DIM}, {expr}, "
+            f"raise_error('embedding narrower than dim={EMB_DIM}'))")
+
+
+def _guarded_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.expr(_dim_guard("embedding")))
+
+
 def _cosine_topk_sql() -> str:
     return f"""
 WITH q AS (
@@ -121,41 +136,41 @@ COSINE_TOPK_SQL = _cosine_topk_sql()
 # --- sign-LSH bucketed variant (scale path; exact DuckDB oracle) -------------
 
 N_PLANES = 8
+# the 16 embedding coordinates every sign-LSH hyperplane samples
+_SIG_COORDS = range(0, EMB_DIM, max(1, EMB_DIM // 16))
 
 
-def _plane_sig_expr(dim: int, base: int = 0) -> str:
+def _plane_sig_expr(base: int = 0) -> str:
     """Deterministic pseudo-random hyperplanes from md5('pl{p}_{i}'):
     component sign = high bit of the first hex digit.  Signature bit p =
     sign of dot(v, plane_p).  ``base`` shifts the array indexing (Spark is
     0-indexed, DuckDB 1-indexed); seed strings always use the 0-indexed
     coordinate so both dialects hash identical inputs.  The linear +-chain
     evaluates left-to-right in both engines, so the float sign is exact."""
-    step = max(1, dim // 16)  # sample 16 coords per plane
     bits = []
     for p in range(N_PLANES):
         dot = " + ".join(
             f"(case when instr('89abcdef', substr(md5('pl{p}_{i}'), 1, 1))"
             f" > 0 then 1 else -1 end) * cast(v[{i + base}] as double)"
-            for i in range(0, dim, step))
+            for i in _SIG_COORDS)
         bits.append(f"(case when ({dot}) > 0 then {1 << p} else 0 end)")
     return " + ".join(bits)
 
 
-def lsh_cosine_topk(spark: SparkSession, sf_dir: str,
-                    dim: int = EMB_DIM) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    sig = _plane_sig_expr(dim)
-    # fail loudly on a dim mismatch: out-of-range v[i] is NULL (ANSI off),
-    # which would silently collapse every vector into bucket 0 and turn
-    # the bucketed join into an all-pairs cross product.  The guard lives
-    # INSIDE the bucket expression so column pruning can't drop it.
-    bucket_expr = (f"if(size(embedding) >= {dim}, "
-                   f"({sig.replace('v[', 'embedding[')}), "
-                   f"raise_error('embedding narrower than dim={dim}'))")
-    bucketed = emb.select(
+def _sig_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, bucket, nrm) under the single-table sign-LSH
+    signature.  The dim guard (_dim_guard) wraps the bucket: a narrow
+    embedding would otherwise land in bucket 0 and turn the bucketed join
+    into an all-pairs cross product."""
+    sig = _plane_sig_expr().replace("v[", "embedding[")
+    return table(spark, sf_dir, "embeddings").select(
         F.col("vec_id"), F.col("embedding"),
-        F.expr(bucket_expr).alias("bucket"),
+        F.expr(_dim_guard(f"({sig})")).alias("bucket"),
         _norm_col("embedding").alias("nrm"))
+
+
+def lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    bucketed = _sig_bucketed(spark, sf_dir)
     queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
         F.col("bucket"), F.col("nrm").alias("na"))
@@ -177,7 +192,7 @@ def lsh_cosine_topk(spark: SparkSession, sf_dir: str,
 def _lsh_topk_sql() -> str:
     """DuckDB mirror: identical signature expression (1-indexed arrays),
     bit-identical explicit-chain cosine re-rank inside buckets only."""
-    sig = _plane_sig_expr(EMB_DIM, base=1).replace("v[", "embedding[")
+    sig = _plane_sig_expr(base=1).replace("v[", "embedding[")
     return f"""
 WITH b AS (
   SELECT vec_id, embedding, ({sig}) AS bucket FROM embeddings
@@ -205,8 +220,7 @@ LSH_TOPK_SQL = _lsh_topk_sql()
 # --- multiprobe sign-LSH (recall path; exact DuckDB oracle) -------------------
 
 
-def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str,
-                        dim: int = EMB_DIM) -> DataFrame:
+def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiprobe sign-LSH: each query probes its own bucket PLUS the 8
     one-bit-flip neighbor buckets (the nearest Hamming-1 signatures), then
     exact cosine re-ranks the union of candidates.
@@ -219,15 +233,7 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str,
     each (query, neighbor) pair matches at most once — no dedup needed.
     Recall vs exact cosine_topk is pinned in tests/test_ann_quality.py.
     """
-    emb = table(spark, sf_dir, "embeddings")
-    sig = _plane_sig_expr(dim)
-    bucket_expr = (f"if(size(embedding) >= {dim}, "
-                   f"({sig.replace('v[', 'embedding[')}), "
-                   f"raise_error('embedding narrower than dim={dim}'))")
-    bucketed = emb.select(
-        F.col("vec_id"), F.col("embedding"),
-        F.expr(bucket_expr).alias("bucket"),
-        _norm_col("embedding").alias("nrm"))
+    bucketed = _sig_bucketed(spark, sf_dir)
     probes = F.array(
         F.col("bucket"),
         *[F.expr(f"bucket ^ {1 << p}") for p in range(N_PLANES)])
@@ -254,7 +260,7 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str,
 
 
 def _multiprobe_topk_sql() -> str:
-    sig = _plane_sig_expr(EMB_DIM, base=1).replace("v[", "embedding[")
+    sig = _plane_sig_expr(base=1).replace("v[", "embedding[")
     flips = ", ".join(
         f"xor(bucket, {1 << p})" for p in range(N_PLANES))
     return f"""
@@ -301,8 +307,7 @@ def _table_sign(t: int, p: int, i: int) -> int:
             .hexdigest()[0] in "89abcdef" else -1)
 
 
-def _table_sig_expr(t: int, dim: int, var: str = "c{j}",
-                    base: int = 0) -> str:
+def _table_sig_expr(t: int, var: str = "c{j}", base: int = 0) -> str:
     """Per-table signature over pre-cast double coordinate variables
     (``var`` templates the coordinate reference; default the c{j} columns
     of the Spark two-layer projection, the oracle passes an inline cast).
@@ -310,13 +315,11 @@ def _table_sig_expr(t: int, dim: int, var: str = "c{j}",
     independent draws and independent of the single-table 'pl{p}_{i}'
     family.  Multiplying by a ±1 literal is exact in IEEE, so folding the
     sign into the text keeps arithmetic bit-identical across engines."""
-    step = max(1, dim // 16)
-    coords = list(range(0, dim, step))
     bits = []
     for p in range(N_PLANES):
         dot = " + ".join(
             f"({_table_sign(t, p, i)} * {var.format(j=j, i=i + base)})"
-            for j, i in enumerate(coords))
+            for j, i in enumerate(_SIG_COORDS))
         bits.append(f"(case when ({dot}) > 0 then {1 << p} else 0 end)")
     return " + ".join(bits)
 
@@ -331,7 +334,7 @@ def _probe_masks() -> list[int]:
                for a, b in combinations(range(N_PLANES), 2)])
 
 
-def _banded_buckets(emb: DataFrame, dim: int) -> DataFrame:
+def _banded_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, embedding) -> (vec_id, t, bucket): one row per vector per
     band-OR signature table.  Two projection layers keep four signatures
     inside janino's 64 KB whole-stage method limit: layer 1 materializes
@@ -340,22 +343,17 @@ def _banded_buckets(emb: DataFrame, dim: int) -> DataFrame:
     2's sig chains then reference those locals with +-1 literals;
     inlining cast(embedding[i] as double) per term generated 512
     cast+multiply statements and knocked the whole stage out of codegen.
-    The dim guard (see lsh_cosine_topk) rides the cast: out-of-range v[i]
-    is NULL, which would silently funnel everything into bucket 0.
+    The dim guard (_dim_guard) rides the cast: out-of-range v[i] is NULL,
+    which would silently funnel everything into bucket 0.
     Shared by band-OR ANN probing and embedding near-dup pair generation,
     which makes the "same signature tables" invariant structural."""
-    step = max(1, dim // 16)
-    coords = list(range(0, dim, step))
-    guard = (f"if(size(embedding) >= {dim}, "
-             f"cast(embedding[{{i}}] as double), "
-             f"raise_error('embedding narrower than dim={dim}'))")
     withc = emb.select(
         "vec_id", "embedding",
-        *[F.expr(guard.format(i=i)).alias(f"c{j}")
-          for j, i in enumerate(coords)])
+        *[F.expr(_dim_guard(f"cast(embedding[{i}] as double)"))
+          .alias(f"c{j}") for j, i in enumerate(_SIG_COORDS)])
     withb = withc.select(
         "vec_id",
-        *[F.expr(f"({_table_sig_expr(t, dim)})").alias(f"b{t}")
+        *[F.expr(f"({_table_sig_expr(t)})").alias(f"b{t}")
           for t in range(L_TABLES)])
     return withb.select(
         "vec_id",
@@ -366,8 +364,7 @@ def _banded_buckets(emb: DataFrame, dim: int) -> DataFrame:
              F.col("tb.bucket").alias("bucket"))
 
 
-def lsh_bandor_topk(spark: SparkSession, sf_dir: str,
-                    dim: int = EMB_DIM) -> DataFrame:
+def lsh_bandor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band-OR amplified sign-LSH top-k: L=4 independent 8-plane signature
     tables, each probed at Hamming distance ≤ 2; the candidate union is
     exact-cosine re-ranked.  Recall@5 vs brute force is pinned at 0.8 in
@@ -388,7 +385,7 @@ def lsh_bandor_topk(spark: SparkSession, sf_dir: str,
     ``_banded_buckets``, shared with ``embedding_near_dup_df``.
     """
     emb = table(spark, sf_dir, "embeddings")
-    stacked = _banded_buckets(emb, dim)
+    stacked = _banded_buckets(emb)
     corpus = stacked.select(F.col("vec_id").alias("neighbor_id"),
                             "t", "bucket")
     probes = F.array(*[F.expr(f"bucket ^ {m}") for m in _probe_masks()])
@@ -422,7 +419,7 @@ def _bandor_topk_sql() -> str:
     UNION ALL stacking, xor probe expansion, distinct candidate pairs,
     bit-identical explicit-chain cosine re-rank."""
     sigs = ", ".join(
-        f"({_table_sig_expr(t, EMB_DIM, var='cast(embedding[{i}] as double)', base=1)})"
+        f"({_table_sig_expr(t, var='cast(embedding[{i}] as double)', base=1)})"
         f" AS b{t}" for t in range(L_TABLES))
     stacked = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS t, b{t} AS bucket FROM b"
@@ -477,8 +474,7 @@ EMB_DUP_THRESHOLD = 0.4
 EMB_BUCKET_CAP = 1000
 
 
-def embedding_near_dup(spark: SparkSession, sf_dir: str,
-                       dim: int = EMB_DIM) -> DataFrame:
+def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate detection over the FULL corpus —
     the vector twin of ``ops.dedup.near_dedup``: banded sign-LSH generates
     candidate pairs, exact cosine verifies them, ``is_dup`` flags pairs at
@@ -502,15 +498,15 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str,
     recall ≈ 0.90) — the plan shape is identical, only N_PLANES/L_TABLES
     change, which is why they are module constants.
     """
-    return embedding_near_dup_df(table(spark, sf_dir, "embeddings"), dim)
+    return embedding_near_dup_df(table(spark, sf_dir, "embeddings"))
 
 
-def embedding_near_dup_df(emb: DataFrame, dim: int = EMB_DIM,
+def embedding_near_dup_df(emb: DataFrame,
                           threshold: float = EMB_DUP_THRESHOLD) -> DataFrame:
     """DataFrame-core of ``embedding_near_dup`` — takes any
     (vec_id, embedding) table so callers (and the planted-duplicate design
     -point test) can run it over corpora the parquet layout doesn't hold."""
-    stacked = _banded_buckets(emb, dim)
+    stacked = _banded_buckets(emb)
     buckets = (
         stacked.groupBy("t", "bucket")
         .agg(F.array_sort(F.collect_set("vec_id")).alias("vs"))
@@ -551,7 +547,7 @@ def _embedding_dedup_sql(threshold: float = EMB_DUP_THRESHOLD) -> str:
     can never silently diverge (the module-level EMBEDDING_DEDUP_SQL is
     this function at the default, matching the gate entry)."""
     sigs = ", ".join(
-        f"({_table_sig_expr(t, EMB_DIM, var='cast(embedding[{i}] as double)', base=1)})"
+        f"({_table_sig_expr(t, var='cast(embedding[{i}] as double)', base=1)})"
         f" AS b{t}" for t in range(L_TABLES))
     stacked = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS t, b{t} AS bucket FROM b"
@@ -712,8 +708,7 @@ def _refine_centroids(corpus: DataFrame, cents: DataFrame,
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str,
-             nprobe: int = IVF_NPROBE, lloyd: bool = True,
-             train_limit: int | None = None,
+             nprobe: int = IVF_NPROBE, train_limit: int | None = None,
              assign_replicas: int = IVF_REPLICAS) -> DataFrame:
     """IVF ANN top-k — the third scale path besides sign-LSH bucketing and
     band-OR: a coarse quantizer assigns every corpus vector to its nearest
@@ -738,16 +733,14 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
     top-R against the broadcast centroid array, see _ivf_assign), so R
     does not add an exchange — only candidate-join rows.
 
-    ``lloyd`` (default True) runs one deterministic Lloyd iteration over
-    the fixed-id seed centroids before assignment (see
-    _refine_centroids); ``lloyd=False`` keeps the raw seed quantizer.
-    More iterations were measured and rejected (see _refine_centroids).
-    ``train_limit`` bounds the Lloyd training set to the deterministic
-    prefix sample vec_id < train_limit (the production shape at corpus
-    sizes where full-corpus training is wasteful; assignment, probing,
-    and re-rank still cover the whole corpus).  Every setting has an
-    exact generated oracle (``_ivf_topk_sql(nprobe=..., lloyd=...,
-    train_limit=...)``).
+    The quantizer is the fixed-id seed centroids sharpened by one
+    deterministic Lloyd iteration (see _refine_centroids; more iterations
+    were measured and rejected).  ``train_limit`` bounds the Lloyd
+    training set to the deterministic prefix sample vec_id < train_limit
+    (the production shape at corpus sizes where full-corpus training is
+    wasteful; assignment, probing, and re-rank still cover the whole
+    corpus).  Every setting has an exact generated oracle
+    (``_ivf_topk_sql(nprobe=..., train_limit=..., assign_replicas=...)``).
 
     Ranking determinism across engines: assignment and probe order are
     (cos DESC, centroid_id ASC); Spark expresses that as
@@ -762,11 +755,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
     (zip_with), and NULL cos ranks as confident garbage -- fail loudly
     instead.
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
+    emb = _guarded_embeddings(spark, sf_dir)
     cents = emb.filter(
         (F.col("vec_id") >= IVF_FIRST)
         & (F.col("vec_id") < IVF_FIRST + IVF_K)).select(
@@ -774,15 +763,13 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
         F.col("embedding").alias("b"))
     corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
                         F.col("embedding").alias("a"))
-    if lloyd:
-        # one Lloyd iteration sharpens the fixed-id seed quantizer: means
-        # of the seed-assigned lists sit near cluster centers instead of
-        # at arbitrary corpus points, lifting recall at fixed nprobe.
-        # localCheckpoint the (16-row) result: it is broadcast twice below
-        # (assignment + probes), and without the checkpoint each broadcast
-        # would re-run the whole training lineage
-        cents = _refine_centroids(corpus, cents, train_limit) \
-            .localCheckpoint()
+    # one Lloyd iteration sharpens the fixed-id seed quantizer: means of
+    # the seed-assigned lists sit near cluster centers instead of at
+    # arbitrary corpus points, lifting recall at fixed nprobe.
+    # localCheckpoint the (16-row) result: it is broadcast twice below
+    # (assignment + probes), and without the checkpoint each broadcast
+    # would re-run the whole training lineage
+    cents = _refine_centroids(corpus, cents, train_limit).localCheckpoint()
     # assignment: in-row top-R against the broadcast centroid array —
     # zero shuffle (see _ivf_assign); R = assign_replicas lists per vector
     assigned = _ivf_assign(corpus, cents, assign_replicas)
@@ -819,17 +806,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
     )
 
 
-def _cents_cte(lloyd: bool = True, train_limit: int | None = None) -> str:
-    """The shared coarse-quantizer CTE block (``cents`` = seed centroids,
-    optionally sharpened by the one Lloyd iteration) — factored out so the
+def _cents_cte(train_limit: int | None = None) -> str:
+    """The shared coarse-quantizer CTE block (``cents`` = seed centroids
+    sharpened by the one Lloyd iteration) — factored out so the
     IVF oracles and the SemDedup oracle derive their clustering from the
     byte-identical SQL text that the Spark side's _refine_centroids /
     _ivf_assign pair is proven exact against."""
-    seed = f"""
-  SELECT vec_id AS centroid_id, embedding FROM embeddings
-  WHERE vec_id >= {IVF_FIRST} AND vec_id < {IVF_FIRST + IVF_K}"""
-    if not lloyd:
-        return f"cents AS ({seed}\n)"
     cos_ac0 = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     # one Lloyd iteration, folded in the exact order Spark folds:
     # per-(centroid, coordinate) left-to-right sum over vec_id-sorted
@@ -837,7 +819,9 @@ def _cents_cte(lloyd: bool = True, train_limit: int | None = None) -> str:
     # single double/bigint division per coordinate
     train = (f"WHERE e.vec_id < {train_limit}"
              if train_limit is not None else "")
-    return f"""cents0 AS ({seed}
+    return f"""cents0 AS (
+  SELECT vec_id AS centroid_id, embedding FROM embeddings
+  WHERE vec_id >= {IVF_FIRST} AND vec_id < {IVF_FIRST + IVF_K}
 ), assigned0 AS (
   SELECT neighbor_id, centroid_id FROM (
     SELECT e.vec_id AS neighbor_id, c.centroid_id,
@@ -863,13 +847,12 @@ def _cents_cte(lloyd: bool = True, train_limit: int | None = None) -> str:
 )"""
 
 
-def _ivf_topk_sql(nprobe: int = IVF_NPROBE, lloyd: bool = True,
-                  train_limit: int | None = None,
+def _ivf_topk_sql(nprobe: int = IVF_NPROBE, train_limit: int | None = None,
                   assign_replicas: int = IVF_REPLICAS) -> str:
     cos_ac = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     cos_qc = _cos_sql("q.embedding", "c.embedding", EMB_DIM)
     cos_qn = _cos_sql("qe.embedding", "ne.embedding", EMB_DIM)
-    cents = _cents_cte(lloyd, train_limit)
+    cents = _cents_cte(train_limit)
     return f"""
 WITH {cents}, assigned AS (
   SELECT neighbor_id, centroid_id FROM (
@@ -955,12 +938,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDedup verdict over the embeddings table: cluster id,
     centroid similarity, above-ε cluster-neighbor count, and the drop flag.
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
-    return semdedup_df(emb)
+    return semdedup_df(_guarded_embeddings(spark, sf_dir))
 
 
 def sem_k_for(n: int) -> int:
@@ -981,8 +959,7 @@ def sem_k_for(n: int) -> int:
     return max(IVF_K, math.isqrt(max(int(n), 0)))
 
 
-def semdedup_scaled(spark: SparkSession, sf_dir: str,
-                    threshold: float = SEM_DUP_THRESHOLD) -> DataFrame:
+def semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production SemDedup: quantizer cell count scales as √n (see
     ``sem_k_for``) so neither the per-cell pair work nor the assignment
     term can go quadratic — the r7 10×-corpus probe measured the fixed-k
@@ -1000,12 +977,8 @@ def semdedup_scaled(spark: SparkSession, sf_dir: str,
     (pinned: the planted-duplicate semantics hold under a wider quantizer,
     tests/test_semdedup.py).
     """
-    dim = EMB_DIM
-    guard = (f"if(size(embedding) >= {dim}, embedding, "
-             f"raise_error('embedding narrower than dim={dim}'))")
-    emb = table(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.expr(guard))
-    return semdedup_df(emb, threshold, k=sem_k_for(emb.count()))
+    emb = _guarded_embeddings(spark, sf_dir)
+    return semdedup_df(emb, k=sem_k_for(emb.count()))
 
 
 def semdedup_df(emb: DataFrame,
@@ -1025,8 +998,8 @@ def semdedup_df(emb: DataFrame,
     default IVF_K=16 is exact-oracle territory at gate scale but
     QUADRATIC in n if held fixed — the r7 10×-corpus probe measured
     wall(10×)/wall(1×) = 48.7 at fixed k=16 (per-cell pairs grow (n/k)²)
-    vs ~linear once k scales with n (``semdedup_scaled``).  The
-    per-vector table feeds three consumers (pair build, both sides of the
+    vs ~15.6× for 9.04× data once k scales as √n (``semdedup_scaled``).
+    The per-vector table feeds three consumers (pair build, both sides of the
     priority comparison, final output), so it is localCheckpointed once —
     at real scale that is the persisted "index" artifact shared with
     ann_ivf_topk.
@@ -1102,12 +1075,12 @@ def semdedup_df(emb: DataFrame,
     )
 
 
-def _semdedup_sql(threshold: float = SEM_DUP_THRESHOLD) -> str:
+def _semdedup_sql() -> str:
     """DuckDB mirror: the shared quantizer CTE (_cents_cte — byte-identical
     to the IVF oracles'), rn=1 assignment, cell self-join for pairs with
-    the identical rounded-cosine threshold, and the same lexicographic
-    (cent_cos, vec_id) drop rule.  ``threshold`` is the SAME parameter
-    ``semdedup_df`` takes, so operator and oracle cannot silently diverge.
+    the identical rounded-cosine threshold (SEM_DUP_THRESHOLD, the
+    ``semdedup_df`` default), and the same lexicographic (cent_cos, vec_id)
+    drop rule.
     """
     cos_ac = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
     cos_ec = _cos_sql("e.embedding", "c.embedding", EMB_DIM)
@@ -1139,7 +1112,7 @@ WITH {_cents_cte()}, assigned AS (
   JOIN cc r ON l.centroid_id = r.centroid_id AND l.vec_id < r.vec_id
   JOIN embeddings ea ON ea.vec_id = l.vec_id
   JOIN embeddings eb ON eb.vec_id = r.vec_id
-  WHERE round({cos_ab}, 6) >= {threshold}
+  WHERE round({cos_ab}, 6) >= {SEM_DUP_THRESHOLD}
 ), adj AS MATERIALIZED (
   SELECT vec_a AS vec_id, vec_b AS other FROM pairs
   UNION ALL

@@ -137,7 +137,6 @@ def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
 
 def run_extraction(df: DataFrame, num_buckets: int | None = None,
                    char_threshold: int = 500,
-                   whale_safe_bytes: int | None = None,
                    dedup_payloads: bool = False) -> DataFrame:
     """transcripts → per-turn extraction results (flat columns).
 
@@ -149,8 +148,7 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     caps every Arrow input batch of the UDF at PYTHON_SOCKET_BUFFER bytes
     as well as 64 rows, so a run of 8 MB-cap documents stages at most the
     cap plus one document in a python worker, on this path, the dedup path
-    and the streaming one alike.  ``whale_safe_bytes`` is accepted for
-    compatibility and ignored; the plan is the same with or without it.
+    and the streaming one alike.
 
     ``dedup_payloads``: extraction is a pure function of the text, and
     real transcript corpora are duplicate-heavy (boilerplate pages,
@@ -291,7 +289,8 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     ``fmt`` is "parquet" here; on an Iceberg-catalog cluster pass
     ``fmt='iceberg'`` and table identifiers instead of paths — the plan is
     identical, Iceberg adds hidden-partition pruning on bucket(conv_id).
-    ``whale_safe_bytes`` is accepted and ignored, as in run_extraction.
+    ``whale_safe_bytes`` is accepted and ignored: the session's Arrow
+    byte cap already bounds whale batches (see run_extraction).
     """
     df = spark.read.format(fmt).load(input_path)
     if num_buckets is None:

@@ -15,13 +15,14 @@ import datetime as _dt
 import hashlib
 import os
 import random
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .schema import TRANSCRIPT_SCHEMA
 
 FIXTURE_DIR = "/root/reference/test/test-pages"
+_FIXTURE_MAX_BYTES = 400_000
+_FIXTURE_EVERY = 4
 _EPOCH = _dt.datetime(2024, 1, 1)
 
 _ROLES = ("user", "assistant", "tool")
@@ -59,23 +60,23 @@ def _index_html(rng: random.Random, i: int) -> str:
     return _INDEX_TMPL.format(i=i, links=links)
 
 
-def _load_fixture_pool(max_bytes: int = 400_000) -> list[str]:
+def _load_fixture_pool() -> list[str]:
     pool = []
     if os.path.isdir(FIXTURE_DIR):
         for case in sorted(os.listdir(FIXTURE_DIR)):
             p = os.path.join(FIXTURE_DIR, case, "source.html")
-            if os.path.exists(p) and os.path.getsize(p) <= max_bytes:
+            if (os.path.exists(p)
+                    and os.path.getsize(p) <= _FIXTURE_MAX_BYTES):
                 pool.append(
                     open(p, encoding="utf-8", errors="replace").read())
     return pool
 
 
 def generate_rows(n_convs: int = 200, seed: int = 42,
-                  use_fixtures: bool = True,
-                  fixture_every: int = 4) -> list[tuple]:
+                  use_fixtures: bool = True) -> list[tuple]:
     """Deterministic row list; conversation length ~ Zipf(a≈2) capped.
 
-    Every ``fixture_every``-th turn embeds a real fixture page (round-robin),
+    Every ``_FIXTURE_EVERY``-th turn embeds a real fixture page (round-robin),
     the rest are seeded template articles/index pages/fragments.
     """
     rng = random.Random(seed)
@@ -95,7 +96,7 @@ def generate_rows(n_convs: int = 200, seed: int = 42,
         for t in range(length):
             role = _ROLES[t % 3]
             tool = "browser" if role == "tool" else None
-            if fixtures and (c * 31 + t) % fixture_every == 0:
+            if fixtures and (c * 31 + t) % _FIXTURE_EVERY == 0:
                 text = fixtures[fixture_i % len(fixtures)]
                 fixture_i += 1
             else:
@@ -114,8 +115,8 @@ def generate_rows(n_convs: int = 200, seed: int = 42,
 
 
 def generate_transcripts(spark: SparkSession, n_convs: int = 200,
-                         seed: int = 42, use_fixtures: bool = True,
-                         num_partitions: Optional[int] = None) -> DataFrame:
+                         seed: int = 42,
+                         use_fixtures: bool = True) -> DataFrame:
     import pandas as pd
 
     rows = generate_rows(n_convs, seed, use_fixtures)
@@ -123,27 +124,25 @@ def generate_transcripts(spark: SparkSession, n_convs: int = 200,
     # serialization for multi-MB HTML payload columns
     pdf = pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-    df = spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df
+    return spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA)
 
 
 def write_transcripts(spark: SparkSession, path: str, n_convs: int = 200,
-                      seed: int = 42, use_fixtures: bool = True) -> str:
+                      seed: int = 42) -> str:
     """Materialize once as parquet (bench reads this, so generation cost
     never pollutes throughput numbers).
 
     The cache key includes the generation parameters — a bare _SUCCESS
     check would silently reuse a stale table when SPARK_GRAFT_BENCH_CONVS
-    (or seed/fixtures) changes — and the count and content hash of the
+    (or the seed) changes — and the count and content hash of the
     fixture pool, so a missing or changed fixture corpus regenerates the
-    table instead of reusing one built from another pool."""
-    pool = _load_fixture_pool() if use_fixtures else []
+    table instead of reusing one built from another pool.  The key keeps
+    its ``fixtures=True`` field so tables cached under it stay valid."""
+    pool = _load_fixture_pool()
     pool_hash = hashlib.sha256()
     for page in pool:
         pool_hash.update(hashlib.sha256(page.encode()).digest())
-    params = (f"n_convs={n_convs} seed={seed} fixtures={use_fixtures} "
+    params = (f"n_convs={n_convs} seed={seed} fixtures=True "
               f"n_fixtures={len(pool)} "
               f"fixtures_sha256={pool_hash.hexdigest()}")
     marker = os.path.join(path, "_PARAMS")
@@ -151,7 +150,7 @@ def write_transcripts(spark: SparkSession, path: str, n_convs: int = 200,
              and os.path.exists(marker)
              and open(marker).read() == params)
     if not fresh:
-        generate_transcripts(spark, n_convs, seed, use_fixtures) \
+        generate_transcripts(spark, n_convs, seed) \
             .repartition(32).write.mode("overwrite").parquet(path)
         with open(marker, "w") as f:
             f.write(params)

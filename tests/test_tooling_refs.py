@@ -4,7 +4,8 @@ bench.py is the frozen driver harness: every ``tools.*`` name it imports,
 including the imports inside its functions, must resolve.  The frozen
 harnesses and the batch job must still import and call the
 ``readability_spark`` API the way they do.  The commands the docs tell a
-reader to run must name scripts that are in the tree.
+reader to run must name scripts that are in the tree.  Every defaulted
+parameter of the operator layer has a caller that sets it.
 """
 
 import ast
@@ -113,3 +114,96 @@ def test_doc_python_commands_name_existing_files(doc):
     missing = sorted({s for s in scripts
                       if not os.path.isfile(os.path.join(REPO, s))})
     assert not missing, f"{doc} runs scripts that do not exist: {missing}"
+
+
+# defaulted parameters of these modules must each be set by some call
+PARAM_DEFINERS = ["readability_spark/ops", "readability_spark/pipeline.py",
+                  "readability_spark/transcripts.py",
+                  "readability_spark/udfs.py"]
+PARAM_CALLERS = ["readability_core", "readability_spark", "tools", "jobs",
+                 "perfbench", "tests", "__spark_entry__.py", "bench.py"]
+
+
+def _py_files(rel):
+    path = os.path.join(REPO, rel)
+    if os.path.isfile(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs
+                         if not d.startswith((".", "__")))
+        yield from (os.path.join(root, f) for f in sorted(files)
+                    if f.endswith(".py"))
+
+
+def _defaulted_params(src):
+    """(function, parameter, position or None for keyword-only) for every
+    parameter with a default, nested functions included."""
+    out = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            out += [(node.name, p.arg, i)
+                    for i, p in enumerate(pos) if i >= first]
+            out += [(node.name, p.arg, None)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None]
+    return out
+
+
+def _call_shapes(src):
+    """callee name -> [(n_positional, keywords)] for every call by bare or
+    attribute name; a ``*args`` splat counts as every position and a
+    ``**kwargs`` splat as every keyword."""
+    shapes = {}
+    for node in ast.walk(ast.parse(src)):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "id", None) or \
+            getattr(node.func, "attr", None)
+        if name is None:
+            continue
+        n = (float("inf") if any(isinstance(a, ast.Starred)
+                                 for a in node.args) else len(node.args))
+        shapes.setdefault(name, []).append(
+            (n, {k.arg for k in node.keywords}))
+    return shapes
+
+
+def _unset_params(definers, callers):
+    shapes = {}
+    for path in callers:
+        for name, calls in _call_shapes(open(path).read()).items():
+            shapes.setdefault(name, []).extend(calls)
+    unset = []
+    for path in definers:
+        for fn, param, pos in _defaulted_params(open(path).read()):
+            if not any(param in kws or None in kws
+                       or (pos is not None and n > pos)
+                       for n, kws in shapes.get(fn, [])):
+                unset.append(f"{os.path.relpath(path, REPO)}: {fn}({param})")
+    return unset
+
+
+def test_every_defaulted_operator_parameter_has_a_caller():
+    """A default no call overrides is a constant in disguise, and on an
+    oracled operator a trap: the DuckDB side hard-codes the constant, so
+    another value would silently leave the gate."""
+    definers = [p for rel in PARAM_DEFINERS for p in _py_files(rel)]
+    callers = [p for rel in PARAM_CALLERS for p in _py_files(rel)]
+    assert len(definers) > 10 and len(callers) > 50
+    unset = _unset_params(definers, callers)
+    assert not unset, f"defaulted parameters nothing sets: {unset}"
+
+
+def test_caller_scan_matches_position_keyword_and_splats(tmp_path):
+    (tmp_path / "d.py").write_text(
+        "def f(a, b=1, c=2, *, d=3):\n    pass\n"
+        "def g(x=0):\n    pass\n")
+    (tmp_path / "c.py").write_text(
+        "import m\nm.f(0, 1)\nf(0, d=4)\ng(**kw)\n")
+    files = [str(tmp_path / "d.py")], [str(tmp_path / "c.py")]
+    assert [u.rsplit(": ", 1)[1] for u in _unset_params(*files)] == \
+        ["f(c)"]

@@ -4,15 +4,15 @@ Arrow input batches of the scalar pandas UDF are capped by bytes as well
 as rows: build_session sets spark.sql.execution.arrow.maxBytesPerBatch to
 PYTHON_SOCKET_BUFFER beside the 64-row maxRecordsPerBatch, so 64 docs at
 the 8 MB truncation cap can no longer stage a ~512 MB batch in a python
-worker (SURVEY §7.4 risk #4).  ``run_extraction(whale_safe_bytes=...)`` is
-a kept keyword that no longer changes the plan.  These tests pin:
+worker (SURVEY §7.4 risk #4).  ``run_pipeline(whale_safe_bytes=...)`` is
+a kept keyword that changes nothing.  These tests pin:
 
-- result equality: output with the keyword == without == plain function
-  (including the >MAX_HTML_BYTES truncation row and a NULL-text row);
+- result equality: whale, giant and NULL rows == the plain function
+  (including the >MAX_HTML_BYTES truncation row);
 - the byte cap: every batch a UDF or mapInPandas sees holds less than the
   cap plus its largest row, on a corpus dense with whales;
-- plan shape: the keyword leaves the executed plan unchanged (one scan of
-  the source, no applyInPandas tier) on the salted and the dedup path;
+- plan shape: one scan of the source and no applyInPandas tier on the
+  salted path, the scalar Arrow UDF on the salted and the dedup path;
 - the end-to-end pipeline (write + metrics + resume) accepts the keyword.
 """
 
@@ -52,11 +52,8 @@ def _by_key(rows):
 
 
 def test_two_tier_equals_single_tier_and_plain(spark, corpus):
-    two = _by_key(run_extraction(corpus, num_buckets=8,
-                                 whale_safe_bytes=100_000).collect())
-    one = _by_key(run_extraction(corpus, num_buckets=8).collect())
-    assert set(two) == set(one)
-    assert sum(1 for k in two if two[k] != one[k]) == 0
+    two = _by_key(run_extraction(corpus, num_buckets=8).collect())
+    assert len(two) == 302
 
     # spot-check whale + giant + null rows against the pure function
     for key, html in ((("conv00", 0), WHALE), (("convg", 7777), GIANT),
@@ -108,12 +105,11 @@ def test_dedup_payloads_equals_default(spark, corpus):
 
 def test_dedup_payloads_composes_with_whale_tiering(spark, corpus):
     """Duplicate-heavy AND whale-bearing corpora co-occur in real crawl
-    data: dedup_payloads=True + whale_safe_bytes=N must (a) match the
+    data: dedup_payloads=True on a whale corpus must (a) match the
     plain path row-for-row — the corpus repeats the same whale payload
     ~9×, which the distinct table collapses to one row — and (b) keep the
     dedup plan's shuffle count."""
-    out = run_extraction(corpus, num_buckets=8, dedup_payloads=True,
-                         whale_safe_bytes=100_000)
+    out = run_extraction(corpus, num_buckets=8, dedup_payloads=True)
     composed = _by_key(out.collect())
     base = _by_key(run_extraction(corpus, num_buckets=8).collect())
     assert set(composed) == set(base)
@@ -176,16 +172,13 @@ def _plan_shape(df):
 
 @pytest.mark.parametrize("dedup", [False, True], ids=["salted", "dedup"])
 def test_whale_safe_bytes_leaves_plan_unchanged(spark, corpus_path, dedup):
-    """The kept keyword is a no-op: the same executed plan with or without
-    it, no applyInPandas tier, and on the salted path one scan of the
-    source (the removed whale tier scanned it twice)."""
+    """Whales take the one scalar Arrow path: no applyInPandas tier, and
+    on the salted path one scan of the source (the removed whale tier
+    scanned it twice)."""
     src = spark.read.parquet(corpus_path)
-    with_kw = _plan_shape(run_extraction(
-        src, num_buckets=8, whale_safe_bytes=100_000, dedup_payloads=dedup))
-    without = _plan_shape(run_extraction(
+    plan = _plan_shape(run_extraction(
         src, num_buckets=8, dedup_payloads=dedup))
-    assert with_kw == without
-    assert "FlatMapGroupsInPandas" not in with_kw
-    assert "ArrowEvalPython" in with_kw
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "ArrowEvalPython" in plan
     if not dedup:
-        assert with_kw.count("FileScan parquet") == 1, with_kw
+        assert plan.count("FileScan parquet") == 1, plan
