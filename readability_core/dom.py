@@ -10,9 +10,9 @@ byte-identical to the reference on unicode inputs.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Optional
+from typing import Optional
 
-from .vdom import VElement, VNode, VText
+from .vdom import VElement, VNode
 
 # JS \s character class (ECMA-262 WhiteSpace + LineTerminator)
 JS_WS = (
@@ -27,14 +27,6 @@ JS_WS_CHARS = (
     + "\u2028\u2029\u202f\u205f\u3000\ufeff"
 
 )
-DIV_TO_P_ELEMS = frozenset(
-    ["blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"])
-
-PHRASING_ELEMS = frozenset(
-    "abbr audio b bdo br button cite code data datalist dfn em embed i img "
-    "input kbd label mark math meter noscript object output progress q ruby "
-    "samp script select small span strong sub sup textarea time var "
-    "wbr".split())
 
 
 def js_trim(s: str) -> str:
@@ -113,26 +105,6 @@ def is_probably_visible(el: VElement) -> bool:
         and "hidden" not in el.attrs
         and el.attrs.get("aria-hidden") != "true"
     )
-
-
-def has_child_block_element(el: VElement) -> bool:
-    """dom.ts:154-162."""
-    return any(
-        c.nodeType == "element"
-        and (c.tag in DIV_TO_P_ELEMS or has_child_block_element(c))
-        for c in el.children
-    )
-
-
-def is_phrasing_content(node: VNode) -> bool:
-    """dom.ts:165-184."""
-    if node.nodeType == "text":
-        return True
-    if node.tag in PHRASING_ELEMS:
-        return True
-    if node.tag in ("a", "del", "ins"):
-        return all(is_phrasing_content(c) for c in node.children)
-    return False
 
 
 def _inner_text_unnormalized(el: VNode) -> str:

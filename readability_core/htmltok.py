@@ -2,8 +2,9 @@
 
 Byte-exact reimplementation of the combined ``feed(html); close()`` behavior
 of CPython's ``html.parser.HTMLParser`` (``convert_charrefs=True``) fused
-with :class:`readability_core.vdom._TreeBuilder`, specialized for one-shot
-parsing where the whole document is available as a single string.  The
+with the html.parser tree builder (``_TreeBuilder`` in
+tests/_reference_forms.py), specialized for one-shot parsing where the
+whole document is available as a single string.  The
 semantics target is the reference parser's public behavior
 (reference: /root/reference/src/parsers/htmlparser2.ts:18-132); the
 *tokenization* quirks (bogus-comment recovery, tolerant attribute grammar,
@@ -21,8 +22,9 @@ All regexes below are *copies* (not imports) of the CPython 3.11 ones, so a
 stdlib refactor can't silently change parsing.  Semantic drift in either
 direction is caught loudly by tests/test_tokenizer_diff.py, which asserts
 tree-equality between this tokenizer and the html.parser-driven builder
-over the full fixture corpus plus adversarial fragments (this also covers
-the old ADVICE concern about the ``updatepos`` override contract).
+(``parse_html_stdlib`` in tests/_reference_forms.py) over the full fixture
+corpus plus adversarial fragments (this also covers the old ADVICE concern
+about the ``updatepos`` override contract).
 
 Fused feed+close equivalences this file relies on (each one verified by the
 differential suite):
@@ -137,7 +139,7 @@ def build_tree(s: str, doc: VDocument) -> None:
     startswith = s.startswith
     implies_close = OPEN_IMPLIES_CLOSE.get
 
-    # -- rare-path tree callbacks (vdom._TreeBuilder semantics) --------------
+    # -- rare-path tree callbacks (_TreeBuilder in tests/_reference_forms.py)
     # the common cases (plain element open, top-of-stack close, text append)
     # are inlined in the scan loop; these closures keep the rare branches
     # out of the hot path

@@ -124,22 +124,11 @@ _MH_PARAMS = [
 LSH_BANDS = 4  # 2 minhashes per band
 
 
-def _shingle_expr() -> str:
-    """3-token shingles of the token array — GENUINELY empty when < 3
-    tokens.  The guard lives in the expression itself: sequence(0, -1)
-    would DESCEND ([0, -1]) and fabricate phantom shingles from NULL /
-    negative indexing, so callers must not rely on pre-filters alone."""
-    return ("case when size(toks) >= 3 then "
-            "transform(sequence(0, size(toks) - 3), "
-            "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) "
-            "else array() end")
-
-
 def _shingle_rows(df: DataFrame, *extra: str) -> DataFrame:
-    """(doc_id[, extra...], toks) → one row per 3-token shingle, identical
-    strings to ``_shingle_expr`` (r8 zip-explode codegen form — see
-    common.ngram_zip_parts; the old ``size(toks) >= 3`` pre-filter is
-    redundant here, short docs simply emit no complete shingles)."""
+    """(doc_id[, extra...], toks) → one row per 3-token shingle, the three
+    tokens joined by single spaces (r8 zip-explode codegen form — see
+    common.ngram_zip_parts; no ``size(toks) >= 3`` pre-filter is needed,
+    short docs simply emit no complete shingles)."""
     zip_expr, gram_expr, last = ngram_zip_parts(3)
     cols = ["doc_id", *extra]
     return (df.select(*cols, F.explode(F.expr(zip_expr)).alias("z"))

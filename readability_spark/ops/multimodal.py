@@ -7,9 +7,8 @@ row-by-row in Python.
 
 The decode step itself is STUBBED (no image/audio libs in this container):
 ``decode_stub`` produces a deterministic fake feature vector from the
-payload bytes, and ``decode_real`` raises ``NotImplementedError`` with the
-intended signature documented — the Spark-side plumbing (schema,
-partitioning, UDF signature, batch shape) is real and tested.
+payload bytes — the Spark-side plumbing (schema, partitioning, UDF
+signature, batch shape) is real and tested.
 """
 
 from __future__ import annotations
@@ -35,14 +34,6 @@ FEATURE_SCHEMA = T.StructType([
 
 _FEATURE_DIM = 8
 _MEDIA_LIMIT = 64
-
-
-def decode_real(payload: bytes, mime: str):
-    """Real decoder hook — wire PIL/libav here on a cluster with the codecs
-    installed.  Intentionally unimplemented in this container."""
-    raise NotImplementedError(
-        "media decode requires image/audio codecs not present in this "
-        "environment; decode_stub provides the deterministic test path")
 
 
 def decode_stub(payload: bytes) -> list[float]:

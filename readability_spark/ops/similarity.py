@@ -37,22 +37,15 @@ _NORM = ("sqrt(aggregate({c}, 0D, (acc, v) -> acc + cast(v as double) * "
          "cast(v as double)))")
 
 
-def _with_cosine(joined: DataFrame) -> DataFrame:
-    return joined.withColumn(
-        "cos",
-        F.expr(_DOT) / (F.expr(_NORM.format(c="a")) *
-                        F.expr(_NORM.format(c="b"))))
-
-
 def _norm_col(c: str):
     """sqrt of the left-fold sum of squares — the exact _NORM value."""
     return F.expr(_NORM.format(c=c))
 
 
 def _with_cosine_pre(joined: DataFrame) -> DataFrame:
-    """``_with_cosine`` over sides carrying precomputed norm columns
-    ``na``/``nb`` (each the sqrt of the SAME left fold — identical
-    doubles, so cos is bit-identical to the inline form).  r8: the inline
+    """cos = ``_DOT`` / (na * nb) over sides carrying precomputed norm
+    columns ``na``/``nb`` (each the sqrt of the SAME left fold — identical
+    doubles, so cos is bit-identical to folding both norms inline).  r8: the inline
     form re-ran the interpreted HOF norm folds per PAIR; precomputing
     once per VECTOR measured 1.9x on the all-pairs cosine join at sf0.1
     with an identical result hash."""
@@ -601,23 +594,10 @@ IVF_REPLICAS = 2      # lists each corpus vector is indexed in (r6:
 IVF_FIRST = N_QUERIES
 
 
-def _cos_over(x: str, y: str) -> str:
-    """The _with_cosine formula as a SQL snippet over arbitrary operands,
-    for use inside higher-order lambdas — the SAME zip_with/aggregate fold
-    and association (dot / (norm_x * norm_y)), so cosines stay
-    bit-identical to the column form and to the oracle's explicit chains."""
-    dot = (f"aggregate(zip_with({x}, {y}, (p, q) -> cast(p as double) * "
-           f"cast(q as double)), 0D, (acc, v) -> acc + v)")
-    nx = (f"sqrt(aggregate({x}, 0D, (acc, v) -> acc + cast(v as double) * "
-          f"cast(v as double)))")
-    ny = (f"sqrt(aggregate({y}, 0D, (acc, v) -> acc + cast(v as double) * "
-          f"cast(v as double)))")
-    return f"({dot} / ({nx} * {ny}))"
-
-
 def _dot_over(x: str, y: str) -> str:
-    """The dot-product fold of ``_cos_over`` alone — for call sites that
-    divide by precomputed norms instead (same fold, same values)."""
+    """The ``_DOT`` fold over arbitrary operands, for use inside
+    higher-order lambdas that divide by precomputed norms (same fold,
+    same values)."""
     return (f"aggregate(zip_with({x}, {y}, (p, q) -> cast(p as double) * "
             f"cast(q as double)), 0D, (acc, v) -> acc + v)")
 

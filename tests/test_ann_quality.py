@@ -117,9 +117,9 @@ def test_embedding_near_dup_semantics(spark, sf_dir):
     here, pinned as a floor.  The design point (cos ≥ 0.99) is proved in
     test_embedding_near_dup_finds_planted_duplicates."""
     from pyspark.sql import functions as F
+    from _reference_forms import _with_cosine
     from readability_spark.ops.similarity import (
         EMB_DUP_THRESHOLD,
-        _with_cosine,
         embedding_near_dup,
     )
 

@@ -14,6 +14,7 @@ from readability_spark.ops.dedup import (
     DEDUP_CLUSTERS_SQL,
     NEAR_DEDUP_SQL,
     _connected_components,
+    _shingle_rows,
     dedup_clusters,
     near_dedup,
 )
@@ -121,6 +122,16 @@ def test_connected_components_property_vs_union_find(spark):
                                  sorted(expected.items()))
 
     run_case()
+
+
+def test_shingle_rows_empty_for_short_docs(spark):
+    """The shingle form near_dedup runs emits nothing for documents under
+    three tokens: no phantom shingles from NULL or negative indexing."""
+    docs = spark.createDataFrame(
+        [(0, []), (1, ["a"]), (2, ["a", "b"]), (3, ["a", "b", "c"])],
+        "doc_id bigint, toks array<string>")
+    rows = _shingle_rows(docs).collect()
+    assert [(r["doc_id"], r["shingle"]) for r in rows] == [(3, "a b c")]
 
 
 def test_near_dedup_matches_oracle(spark):

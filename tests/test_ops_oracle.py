@@ -49,7 +49,7 @@ def test_bpe_regex_parity_spark_vs_duckdb(spark, s):
 
 
 def test_shingle_expr_empty_for_short_docs(spark):
-    from readability_spark.ops.dedup import _shingle_expr
+    from _reference_forms import _shingle_expr
     rows = (spark.createDataFrame(
         [(["a"],), (["a", "b"],), (["a", "b", "c"],), ([],)],
         "toks array<string>")

@@ -113,8 +113,8 @@ def test_cosine_pre_norms_bit_identical(spark):
     """_with_cosine_pre over precomputed norms produces bit-identical
     cos values to the inline _with_cosine fold."""
     from readability_spark.ops.common import table
-    from readability_spark.ops.similarity import (_norm_col, _with_cosine,
-                                                  _with_cosine_pre)
+    from _reference_forms import _with_cosine
+    from readability_spark.ops.similarity import _norm_col, _with_cosine_pre
 
     emb = table(spark, SF, "embeddings").filter(F.col("vec_id") < 60)
     q = emb.select(F.col("vec_id").alias("qid"),

@@ -17,7 +17,8 @@ import os
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from readability_core.vdom import parse_html, parse_html_stdlib
+from _reference_forms import parse_html_stdlib
+from readability_core.vdom import parse_html
 
 
 def tree_sig(doc):

@@ -5,7 +5,9 @@ including the imports inside its functions, must resolve.  The frozen
 harnesses and the batch job must still import and call the
 ``readability_spark`` API the way they do.  The commands the docs tell a
 reader to run must name scripts that are in the tree.  Every defaulted
-parameter of the operator layer has a caller that sets it.
+parameter of the operator layer has a caller that sets it.  Every product
+definition is reachable from what production runs, and the worker's import
+set leaves out the test-only html.parser oracle.
 """
 
 import ast
@@ -13,6 +15,8 @@ import importlib
 import inspect
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -207,3 +211,123 @@ def test_caller_scan_matches_position_keyword_and_splats(tmp_path):
     files = [str(tmp_path / "d.py")], [str(tmp_path / "c.py")]
     assert [u.rsplit(": ", 1)[1] for u in _unset_params(*files)] == \
         ["f(c)"]
+
+
+# every top-level definition of the product packages must be reached from
+# their __all__, their module-level statements or a name these files read
+PRODUCT = ["readability_core", "readability_spark"]
+REACH_ROOTS = ["tools", "jobs", "perfbench", "bench.py", "__spark_entry__.py"]
+_STREAMING = "streaming surface; test_streaming drives it"
+_PORT = "port of the reference library's public API (COVERAGE.md)"
+_SEMDEDUP = ("carried semdedup scale path (ARCHITECTURE.md, "
+             "'The one super-linear gate path')")
+UNREACHED_ALLOWED = {
+    "stream_source": _STREAMING,
+    "stream_extract": _STREAMING,
+    "stream_conversation_stats": _STREAMING,
+    "stream_sessionize": _STREAMING,
+    "run_stream": _STREAMING,
+    "stream_dedup": _STREAMING,
+    "find_structural_elements": _PORT,
+    "analyze_content_characteristics": _PORT,
+    "is_significant_node": _PORT,
+    "analyze_url_pattern": _PORT,
+    "get_aria_role": _PORT,
+    "get_aria_node_type": _PORT,
+    "get_node_depth": _PORT,
+    "extract_sections": _PORT,
+    "semdedup_scaled": _SEMDEDUP,
+    "sem_k_for": _SEMDEDUP,
+}
+
+
+def _ast_names(node):
+    """Every Name and Attribute name under ``node``; strings and
+    docstrings hold no names."""
+    return {n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))}
+
+
+def _unreached(product, roots, allowed=()):
+    """'path: name' of every top-level def, class or assignment of the
+    ``product`` files that no root reaches, directly or through other
+    product definitions.  Roots: ``__all__`` entries, the names read by
+    module-level statements and by the ``roots`` files, and ``allowed``.
+    Matching is by name across modules; dunder names are exempt."""
+    defs, reached = {}, set(allowed)
+    for path in product:
+        for stmt in ast.parse(open(path).read()).body:
+            targets = (stmt.targets if isinstance(stmt, ast.Assign) else
+                       [stmt.target] if isinstance(stmt, ast.AnnAssign)
+                       else [])
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((path, stmt))
+            elif targets and all(isinstance(t, ast.Name) for t in targets):
+                for t in targets:
+                    if t.id == "__all__":
+                        reached |= {e.value for e in stmt.value.elts}
+                    defs.setdefault(t.id, []).append((path, stmt))
+            else:
+                reached |= _ast_names(stmt)
+    for path in roots:
+        reached |= _ast_names(ast.parse(open(path).read()))
+    todo, seen = [n for n in reached if n in defs], set()
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += [m for _, node in defs[name] for m in _ast_names(node)
+                     if m in defs]
+    return sorted(f"{os.path.relpath(path, REPO)}: {name}"
+                  for name, nodes in defs.items() for path, _ in nodes
+                  if name not in seen
+                  and not (name.startswith("__") and name.endswith("__")))
+
+
+def test_every_product_definition_is_reached():
+    """Product code is what production runs: a definition only tests
+    reach belongs in tests (tests/_reference_forms.py), one nothing
+    reaches is deleted.  Each allowlisted name must still need its entry."""
+    product = [p for rel in PRODUCT for p in _py_files(rel)]
+    roots = [p for rel in REACH_ROOTS for p in _py_files(rel)]
+    assert len(product) > 30 and len(roots) > 5
+    unreached = _unreached(product, roots, UNREACHED_ALLOWED)
+    assert not unreached, f"product definitions nothing reaches: {unreached}"
+    bare = {u.rsplit(": ", 1)[1] for u in _unreached(product, roots)}
+    assert set(UNREACHED_ALLOWED) <= bare, \
+        f"allowlisted but reached: {sorted(set(UNREACHED_ALLOWED) - bare)}"
+
+
+def test_reach_scan_follows_names_not_strings(tmp_path):
+    (tmp_path / "p.py").write_text(
+        "__all__ = ['api']\n"
+        "def api():\n    return _helper()\n"
+        "def _helper():\n    return CONST\n"
+        "CONST = 1\n"
+        "def _orphan():\n    '_named_in_string'\n    return _orphan()\n"
+        "def _named_in_string():\n    pass\n"
+        "def _via_attribute():\n    pass\n"
+        "def _statement_root():\n    pass\n"
+        "_statement_root()\n"
+        "def _allowed():\n    return _from_allowed()\n"
+        "def _from_allowed():\n    pass\n"
+        "def __dunder__():\n    pass\n")
+    (tmp_path / "r.py").write_text(
+        "import p\np._via_attribute()\nprint('_named_in_string')\n")
+    unreached = _unreached([str(tmp_path / "p.py")],
+                           [str(tmp_path / "r.py")], {"_allowed"})
+    assert [u.rsplit(": ", 1)[1] for u in unreached] == \
+        ["_named_in_string", "_orphan"]
+
+
+def test_worker_import_set_leaves_out_html_parser():
+    """A Python worker imports the core and the UDF module; the
+    html.parser oracle builder lives in tests, so neither loads it."""
+    probe = ("import sys, readability_core, readability_spark.udfs\n"
+             "print([m for m in ('html.parser', '_markupbase') "
+             "if m in sys.modules])")
+    out = subprocess.run([sys.executable, "-c", probe], cwd=REPO,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]"
