@@ -46,4 +46,3 @@ RE_AD_COMBINED = re.compile(
     r"ad-|^ad$|^ads$|advert|banner|sponsor|promo|google-ad|adsense|"
     r"doubleclick|amazon|affiliate|commercial|paid|shopping|recommendation",
     re.I)
-AD_PATTERNS = (RE_AD_COMBINED,)   # kept as a tuple for API compatibility

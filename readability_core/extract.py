@@ -75,10 +75,14 @@ def extract_full(html: Optional[str],
     ``parser`` is the pluggable-parser hook (extract.ts ReadabilityOptions.
     parser): a callable (html, base_uri) -> VDocument; default parse_html.
 
-    Returns a flat record (the Spark output struct):
-    page_type, title, byline, lang, site_name, extracted_text, extracted_md,
-    extracted_html, node_count, top_score, candidate_scores, n_candidates,
-    links, n_links, body_text_len, char_yield, span_start, span_end, error.
+    Returns ``(record, doc, root, candidates)``.  The record is a flat dict:
+    page_type, page_type_v2, article_possibility, title, byline, lang,
+    site_name, extracted_text, extracted_md, extracted_html, node_count,
+    top_score, candidate_scores, n_candidates, links, n_links, aria_tree,
+    aria_node_count, body_text_len, char_yield, span_start, span_end,
+    error.  The Spark output struct (``schema.EXTRACT_SCHEMA``) derives
+    from it: it splits ``links`` into link_hrefs/link_texts and has no
+    extracted_html.
     """
     doc, error = parse_guarded(html, base_uri, parser)
     return extract_from_doc(doc, error, char_threshold, nb_top_candidates,

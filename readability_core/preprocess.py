@@ -8,8 +8,7 @@ patterns and ad-related attributes.
 
 from __future__ import annotations
 
-from .constants import AD_PATTERNS, TAGS_TO_REMOVE
-from .dom import get_elements_by_tag_name
+from .constants import RE_AD_COMBINED, TAGS_TO_REMOVE
 from .vdom import VDocument, VElement
 
 _REMOVE_SET = frozenset(TAGS_TO_REMOVE)
@@ -25,11 +24,8 @@ def is_likely_ad(el: VElement) -> bool:
         return False
     cls = a.get("class")
     eid = a.get("id")
-    if cls or eid:
-        combined = f"{cls or ''} {eid or ''}"
-        for pat in AD_PATTERNS:
-            if pat.search(combined):
-                return True
+    if (cls or eid) and RE_AD_COMBINED.search(f"{cls or ''} {eid or ''}"):
+        return True
     return (
         a.get("role") == "advertisement"
         or "data-ad" in a

@@ -209,12 +209,6 @@ def _join_md_parts(parts: list[str]) -> str:
     return result
 
 
-def _all_text_content(node: VNode) -> str:
-    if node.nodeType == "text":
-        return node.text
-    return "".join(_all_text_content(c) for c in node.children)
-
-
 def _convert_node(node: VNode, parent_tag: Optional[str] = None,
                   depth: int = 0,
                   memo: Optional[dict] = None) -> str:
@@ -309,7 +303,8 @@ def _convert_node_body(node: VNode, parent_tag: Optional[str],
         code_child = next(
             (c for c in el.children
              if c.nodeType == "element" and c.tag == "code"), None)
-        raw = _all_text_content(code_child if code_child is not None else el)
+        raw = extract_text_content(
+            code_child if code_child is not None else el)
         lang = ""
         cls = code_child.attrs.get("class", "") if code_child is not None else ""
         m = _RE_LANG_CLASS.search(cls)

@@ -42,6 +42,35 @@ _WS_CLASS_SPARK = f"[{WS_CHARS_SPARK}]+"
 _WS_CLASS_SQL = f"[{WS_CHARS_SQL}]+"
 
 
+def group_pairs(df: DataFrame, keys, id_col: str, names,
+                cap: int | None = None) -> DataFrame:
+    """Every i<j pair of ``id_col`` values that share a ``keys`` group, as
+    the two columns ``names`` (lower id first).
+
+    ONE lineage: groupBy the keys to a sorted id array and expand the pairs
+    in-row with array lambdas — no self-join, so the upstream lineage runs
+    exactly once (a self-join recomputes it per side, since ReuseExchange
+    can't match a broadcast build against a shuffle read).  Groups larger
+    than ``cap`` are dropped: a group of B ids yields B²/2 pairs.  No
+    de-duplication: a pair that shares several groups is emitted once per
+    group, and callers that can see that add ``.distinct()``."""
+    a, b = names
+    size = F.size("ids") >= 2
+    if cap is not None:
+        size = size & (F.size("ids") <= cap)
+    pair_expr = (
+        "flatten(transform(ids, (x, i) -> "
+        "transform(slice(ids, i + 2, size(ids)), "
+        f"y -> struct(x AS {a}, y AS {b}))))")
+    return (
+        df.groupBy(*keys)
+        .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
+        .filter(size)
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(f"p.{a}", f"p.{b}")
+    )
+
+
 def tokens_col(text_col: str = "text"):
     """Non-empty whitespace tokens of lower(trim(text)) as array<string>.
 
@@ -111,6 +140,10 @@ def ngram_zip_parts(n: int) -> tuple[str, str, str]:
     tokenize from the pushed-down scan filter."""
     parts = ["toks"] + [f"slice(toks, {j + 1}, size(toks))"
                         for j in range(1, n)]
+    # z.`1`, z.`2`, ... are Spark 4.1's auto-names for arrays_zip arguments
+    # that are not columns (the slices); a Spark that names them otherwise
+    # breaks this.  The canary is test_r08_optimizations::
+    # test_ngram_zip_parts_equals_transform_slice_form.
     fields = ["z.toks"] + [f"z.`{j}`" for j in range(1, n)]
     return (f"arrays_zip({', '.join(parts)})",
             f"concat_ws(' ', {', '.join(fields)})",

@@ -24,7 +24,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import (SQL_TOKENS, md5_prefix_int_expr,
+from .common import (SQL_TOKENS, group_pairs, md5_prefix_int_expr,
                      md5_prefix_int_fast_expr, ngram_zip_parts, table,
                      tokens_col)
 
@@ -200,36 +200,25 @@ MINHASH_SQL = _minhash_sql()
 LSH_BUCKET_CAP = 1000
 
 
-def _band_pairs(sig: DataFrame) -> DataFrame:
-    """sig(doc_id, mh0..mh7) → distinct candidate (doc_a < doc_b) pairs.
-
-    ONE lineage: explode the 4-element band array (not a 4-way unionAll),
-    groupBy the tiny (band, mh_a, mh_b) key, and generate the i<j pairs
-    inside each bucket with array lambdas — no self-join, so the upstream
-    minhash aggregation is computed exactly once (a band-table self-join
-    recomputes it per side, since ReuseExchange can't match a broadcast
-    build against a shuffle read)."""
+def _band_rows(sig: DataFrame) -> DataFrame:
+    """sig(doc_id, mh0..mh7) → (doc_id, band, k1, k2), one row per band:
+    an explode of the 4-element band array, not a 4-way unionAll."""
     band_arr = F.array(*[
         F.struct(F.lit(band).alias("band"),
                  F.col(f"mh{2 * band}").alias("k1"),
                  F.col(f"mh{2 * band + 1}").alias("k2"))
         for band in range(LSH_BANDS)])
-    bands = (sig.select("doc_id", F.explode(band_arr).alias("bk"))
-             .select("doc_id", "bk.band", "bk.k1", "bk.k2"))
-    buckets = (
-        bands.groupBy("band", "k1", "k2")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= LSH_BUCKET_CAP))
-    )
-    pair_expr = (
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))")
-    return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    return (sig.select("doc_id", F.explode(band_arr).alias("bk"))
+            .select("doc_id", "bk.band", "bk.k1", "bk.k2"))
+
+
+def _band_pairs(sig: DataFrame) -> DataFrame:
+    """sig(doc_id, mh0..mh7) → distinct candidate (doc_a < doc_b) pairs:
+    docs sharing a (band, k1, k2) bucket, paired in one lineage by
+    ``group_pairs`` so the upstream minhash aggregation runs exactly once.
+    A pair colliding in several bands is emitted once."""
+    return group_pairs(_band_rows(sig), ["band", "k1", "k2"], "doc_id",
+                       ("doc_a", "doc_b"), LSH_BUCKET_CAP).distinct()
 
 
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,22 +44,11 @@ from pyspark.sql import functions as F
 
 from .common import (SQL_TOKENS, md5_prefix_int_expr,
                      md5_prefix_int_fast_expr, table, tokens_col)
-from .dedup import _MH_PARAMS, _MH_PRIME, _minhash_aggs, _shingle_rows, \
-    LSH_BANDS
+from .dedup import _MH_PARAMS, _MH_PRIME, _band_rows, _minhash_aggs, \
+    _shingle_rows, LSH_BANDS
 
 _SNAP_NEW = ("substr(md5(concat('snap|', CAST(doc_id AS STRING))), 1, 1)"
              " IN ('c', 'd', 'e', 'f')")
-
-
-def _band_rows(sig: DataFrame) -> DataFrame:
-    """sig(doc_id, mh0..mh7) → (doc_id, band, k1, k2), one row/band."""
-    band_arr = F.array(*[
-        F.struct(F.lit(band).alias("band"),
-                 F.col(f"mh{2 * band}").alias("k1"),
-                 F.col(f"mh{2 * band + 1}").alias("k2"))
-        for band in range(LSH_BANDS)])
-    return (sig.select("doc_id", F.explode(band_arr).alias("bk"))
-            .select("doc_id", "bk.band", "bk.k1", "bk.k2"))
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import table
+from .common import group_pairs, table
 
 N_QUERIES = 5
 TOP_K = 5
@@ -53,17 +53,34 @@ def _with_cosine_pre(joined: DataFrame) -> DataFrame:
         "cos", F.expr(_DOT) / (F.col("na") * F.col("nb")))
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("b"),
-                        _norm_col("embedding").alias("nb"))
-    # queries are tiny → broadcast; corpus streams through unshuffled
-    joined = corpus.crossJoin(F.broadcast(queries))
-    scored = _with_cosine_pre(joined)
+def _vectors(emb: DataFrame, id_col: str, side: str) -> DataFrame:
+    """(id_col, side, n{side}): one side of a ``_with_cosine_pre`` join,
+    each vector with its precomputed norm."""
+    return emb.select(F.col("vec_id").alias(id_col),
+                      F.col("embedding").alias(side),
+                      _norm_col("embedding").alias(f"n{side}"))
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    """(query_id, a, na) for the N_QUERIES query vectors."""
+    return _vectors(emb.filter(F.col("vec_id") < N_QUERIES), "query_id", "a")
+
+
+def _neighbors(emb: DataFrame) -> DataFrame:
+    """(neighbor_id, b, nb) for every corpus vector."""
+    return _vectors(emb, "neighbor_id", "b")
+
+
+def _pair_cosine(pairs: DataFrame, emb: DataFrame) -> DataFrame:
+    """(vec_a, vec_b) pairs with their exact cosine ``cos``, via two
+    equi-joins back to the corpus."""
+    return _with_cosine_pre(pairs.join(_vectors(emb, "vec_a", "a"), "vec_a")
+                            .join(_vectors(emb, "vec_b", "b"), "vec_b"))
+
+
+def _rank_top_k(scored: DataFrame) -> DataFrame:
+    """The exact re-rank every ANN operator ends in: per query the TOP_K
+    scored candidates by (cos DESC, neighbor_id ASC), the oracles' order."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -72,6 +89,13 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "rank", "neighbor_id")
         .orderBy("query_id", "rank")
     )
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    # queries are tiny → broadcast; corpus streams through unshuffled
+    return _rank_top_k(_with_cosine_pre(
+        _neighbors(emb).crossJoin(F.broadcast(_queries(emb)))))
 
 
 def _dot_chain_sql(x: str, y: str, dim: int) -> str:
@@ -170,16 +194,8 @@ def lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = bucketed.select(F.col("vec_id").alias("neighbor_id"),
                              F.col("embedding").alias("b"), F.col("bucket"),
                              F.col("nrm").alias("nb"))
-    joined = corpus.join(F.broadcast(queries), "bucket")
-    scored = _with_cosine_pre(joined)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_top_k(_with_cosine_pre(
+        corpus.join(F.broadcast(queries), "bucket")))
 
 
 def _lsh_topk_sql() -> str:
@@ -240,16 +256,8 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = bucketed.select(F.col("vec_id").alias("neighbor_id"),
                              F.col("embedding").alias("b"), F.col("bucket"),
                              F.col("nrm").alias("nb"))
-    joined = corpus.join(F.broadcast(queries), "bucket")
-    scored = _with_cosine_pre(joined)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_top_k(_with_cosine_pre(
+        corpus.join(F.broadcast(queries), "bucket")))
 
 
 def _multiprobe_topk_sql() -> str:
@@ -389,22 +397,9 @@ def lsh_bandor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (corpus.join(F.broadcast(queries), ["t", "bucket"])
             .select("query_id", "neighbor_id").distinct())
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(
-        cand.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_top_k(_with_cosine_pre(
+        cand.join(F.broadcast(_queries(emb)), "query_id")
+        .join(_neighbors(emb), "neighbor_id")))
 
 
 def _bandor_topk_sql() -> str:
@@ -477,8 +472,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature band — the SAME md5-seeded tables ann_bandor_topk probes, so
     at scale the bucketed artifact is shared between dedup and ANN);
     within each (band, bucket) the i<j pairs are generated by the
-    single-lineage bucket-grouping pattern of ``ops.dedup._band_pairs`` —
-    group to a sorted vec_id array, expand with array lambdas — so there
+    single-lineage bucket grouping of ``common.group_pairs`` (the same
+    helper ``ops.dedup._band_pairs`` uses) — group to a sorted vec_id
+    array, expand with array lambdas — so there
     is NO self-join and the signature projection runs exactly once.
     Quadratic work is confined to colliding buckets and capped
     (EMB_BUCKET_CAP) against degenerate buckets.  Candidate pairs then
@@ -499,28 +495,10 @@ def embedding_near_dup_df(emb: DataFrame,
     """DataFrame-core of ``embedding_near_dup`` — takes any
     (vec_id, embedding) table so callers (and the planted-duplicate design
     -point test) can run it over corpora the parquet layout doesn't hold."""
-    stacked = _banded_buckets(emb)
-    buckets = (
-        stacked.groupBy("t", "bucket")
-        .agg(F.array_sort(F.collect_set("vec_id")).alias("vs"))
-        .filter((F.size("vs") >= 2) & (F.size("vs") <= EMB_BUCKET_CAP))
-    )
-    pair_expr = (
-        "flatten(transform(vs, (x, i) -> "
-        "transform(slice(vs, i + 2, size(vs)), "
-        "y -> struct(x AS vec_a, y AS vec_b))))")
-    pairs = (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.vec_a", "p.vec_b")
-        .distinct()
-    )
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("a"),
-                    _norm_col("embedding").alias("na"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(pairs.join(ea, "vec_a").join(eb, "vec_b"))
+    # a pair colliding in several bands is verified once
+    pairs = group_pairs(_banded_buckets(emb), ["t", "bucket"], "vec_id",
+                        ("vec_a", "vec_b"), EMB_BUCKET_CAP).distinct()
+    scored = _pair_cosine(pairs, emb)
     cos6 = F.round(F.col("cos"), 6)
     return (
         scored.select(
@@ -687,6 +665,26 @@ def _refine_centroids(corpus: DataFrame, cents: DataFrame,
                 " / n)").alias("b")))
 
 
+def _quantizer(emb: DataFrame, k: int,
+               train_limit: int | None = None):
+    """(corpus, cents): the corpus as (neighbor_id, a) and the coarse
+    quantizer as (centroid_id, b) — the ``k`` fixed-id seed centroids
+    vec_id in [IVF_FIRST, IVF_FIRST + k) sharpened by one Lloyd iteration
+    (``_refine_centroids``), whose means sit near cluster centers instead
+    of at arbitrary corpus points.  The small result is localCheckpointed:
+    callers broadcast it more than once, and each broadcast would otherwise
+    re-run the whole training lineage."""
+    seeds = emb.filter(
+        (F.col("vec_id") >= IVF_FIRST)
+        & (F.col("vec_id") < IVF_FIRST + int(k))).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("b"))
+    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
+                        F.col("embedding").alias("a"))
+    return corpus, _refine_centroids(corpus, seeds,
+                                     train_limit).localCheckpoint()
+
+
 def ivf_topk(spark: SparkSession, sf_dir: str,
              nprobe: int = IVF_NPROBE, train_limit: int | None = None,
              assign_replicas: int = IVF_REPLICAS) -> DataFrame:
@@ -736,27 +734,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
     instead.
     """
     emb = _guarded_embeddings(spark, sf_dir)
-    cents = emb.filter(
-        (F.col("vec_id") >= IVF_FIRST)
-        & (F.col("vec_id") < IVF_FIRST + IVF_K)).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("b"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("a"))
-    # one Lloyd iteration sharpens the fixed-id seed quantizer: means of
-    # the seed-assigned lists sit near cluster centers instead of at
-    # arbitrary corpus points, lifting recall at fixed nprobe.
-    # localCheckpoint the (16-row) result: it is broadcast twice below
-    # (assignment + probes), and without the checkpoint each broadcast
-    # would re-run the whole training lineage
-    cents = _refine_centroids(corpus, cents, train_limit).localCheckpoint()
+    corpus, cents = _quantizer(emb, IVF_K, train_limit)
     # assignment: in-row top-R against the broadcast centroid array —
     # zero shuffle (see _ivf_assign); R = assign_replicas lists per vector
     assigned = _ivf_assign(corpus, cents, assign_replicas)
     # query probes: nearest IVF_NPROBE centroids per query (tiny)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"),
-        _norm_col("embedding").alias("na"))
+    queries = _queries(emb)
     probe_scored = _with_cosine_pre(queries.crossJoin(F.broadcast(
         cents.withColumn("nb", _norm_col("b")))))
     w_probe = Window.partitionBy("query_id").orderBy(
@@ -771,19 +754,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
         .select("query_id", "neighbor_id")
     if assign_replicas > 1:
         cand = cand.distinct()
-    ne = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    scored = _with_cosine_pre(
-        cand.join(F.broadcast(queries), "query_id").join(ne, "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_top_k(_with_cosine_pre(
+        cand.join(F.broadcast(queries), "query_id")
+        .join(_neighbors(emb), "neighbor_id")))
 
 
 def _cents_cte(train_limit: int | None = None) -> str:
@@ -984,14 +957,7 @@ def semdedup_df(emb: DataFrame,
     at real scale that is the persisted "index" artifact shared with
     ann_ivf_topk.
     """
-    cents = emb.filter(
-        (F.col("vec_id") >= IVF_FIRST)
-        & (F.col("vec_id") < IVF_FIRST + int(k))).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("b"))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("a"))
-    cents = _refine_centroids(corpus, cents).localCheckpoint()
+    corpus, cents = _quantizer(emb, k)
     assigned = _ivf_assign(corpus, cents, 1)
     cc = _with_cosine_pre(
         assigned.join(corpus.withColumn("na", _norm_col("a")),
@@ -1000,31 +966,15 @@ def semdedup_df(emb: DataFrame,
               "centroid_id")).select(
         F.col("neighbor_id").alias("vec_id"), "centroid_id",
         F.round(F.col("cos"), 6).alias("cent_cos")).localCheckpoint()
-    # within-cell candidate pairs via the single-lineage grouping pattern
-    # (ops.dedup._band_pairs / embedding_near_dup): sorted vec_id array per
-    # cell, i<j expansion with array lambdas — no self-join, the assignment
-    # runs exactly once.  replicas=1 ⇒ a pair can only arise in one cell.
-    cells = (cc.groupBy("centroid_id")
-             .agg(F.array_sort(F.collect_set("vec_id")).alias("vs"))
-             .filter(F.size("vs") >= 2))
-    pair_expr = (
-        "flatten(transform(vs, (x, i) -> "
-        "transform(slice(vs, i + 2, size(vs)), "
-        "y -> struct(x AS vec_a, y AS vec_b))))")
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("a"),
-                    _norm_col("embedding").alias("na"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("b"),
-                    _norm_col("embedding").alias("nb"))
-    # the verified dup-pair set is tiny (threshold tail of within-cell
-    # pairs); materialize it once — its lineage otherwise replays the
-    # explode + two corpus joins for each of the union sides below
+    # within-cell candidate pairs (common.group_pairs: no self-join, the
+    # assignment runs exactly once); replicas=1 ⇒ a pair can only arise in
+    # one cell, so no distinct.  The verified dup-pair set is tiny
+    # (threshold tail of within-cell pairs); materialize it once — its
+    # lineage otherwise replays the explode + two corpus joins for each of
+    # the union sides below
+    cand = group_pairs(cc, ["centroid_id"], "vec_id", ("vec_a", "vec_b"))
     pairs = (
-        _with_cosine_pre(
-            cells.select(F.explode(F.expr(pair_expr)).alias("p"))
-            .select("p.vec_a", "p.vec_b")
-            .join(ea, "vec_a").join(eb, "vec_b"))
+        _pair_cosine(cand, emb)
         .filter(F.round(F.col("cos"), 6) >= threshold)
         .select("vec_a", "vec_b")).localCheckpoint()
     adj = pairs.select(F.col("vec_a").alias("vec_id"),

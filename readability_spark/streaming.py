@@ -30,22 +30,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ops.relational import SESSION_GAP_MIN
 from .pipeline import salt_col
 from .schema import TRANSCRIPT_SCHEMA
 from .udfs import extract_udf
 
+MAX_FILES_PER_TRIGGER = 4
+STATS_WINDOW = "10 minutes"
+STATS_SLIDE = "5 minutes"
+STATS_WATERMARK = "15 minutes"
+SESSION_WATERMARK = "30 minutes"
 
-def stream_source(spark: SparkSession, path: str,
-                  max_files_per_trigger: int = 4) -> DataFrame:
+
+def stream_source(spark: SparkSession, path: str) -> DataFrame:
     """File-source readStream over a transcript directory."""
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(path)
     )
 
 
-def stream_extract(transcripts: DataFrame, num_buckets: int = 32) -> DataFrame:
+def stream_extract(transcripts: DataFrame, num_buckets: int) -> DataFrame:
     """Streaming extraction: same salt + UDF as the batch path.
 
     No shuffle is injected here — a streaming repartition would force a
@@ -57,14 +63,11 @@ def stream_extract(transcripts: DataFrame, num_buckets: int = 32) -> DataFrame:
         "conv_id", "turn_idx", "bucket_id", "ts", "x.*")
 
 
-def stream_conversation_stats(extracted: DataFrame,
-                              window: str = "10 minutes",
-                              slide: str = "5 minutes",
-                              watermark: str = "15 minutes") -> DataFrame:
+def stream_conversation_stats(extracted: DataFrame) -> DataFrame:
     """Watermarked windowed rollup: per-window article counts and yields."""
     return (
-        extracted.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), F.col("conv_id"))
+        extracted.withWatermark("ts", STATS_WATERMARK)
+        .groupBy(F.window("ts", STATS_WINDOW, STATS_SLIDE), F.col("conv_id"))
         .agg(
             F.count("*").alias("n_turns"),
             F.sum(F.when(F.col("page_type") == "article", 1).otherwise(0))
@@ -80,16 +83,13 @@ SESSION_OUT_SCHEMA = ("user_id long, session_start timestamp, "
 SESSION_STATE_SCHEMA = ("start long, last long, n long, cents long, "
                         "buf_ts array<long>, buf_id array<long>, "
                         "buf_cents array<long>")
-SESSION_GAP_MIN = 30        # mirror of ops.relational.SESSION_GAP_MIN
 
 
-def stream_sessionize(events: DataFrame,
-                      gap_minutes: int = SESSION_GAP_MIN,
-                      watermark: str = "30 minutes") -> DataFrame:
+def stream_sessionize(events: DataFrame) -> DataFrame:
     """Custom stateful operator: gap-based sessionization over the event
     stream via ``applyInPandasWithState`` — the streaming twin of the batch
-    ``ops.relational.sessionize`` (same 30-min gap, same per-row integer
-    cents), with per-user GroupState.
+    ``ops.relational.sessionize`` (its SESSION_GAP_MIN gap, same per-row
+    integer cents), with per-user GroupState.
 
     Late/disordered data: events may arrive disordered both WITHIN a
     microbatch and ACROSS microbatches, up to the watermark — exactly the
@@ -100,12 +100,12 @@ def stream_sessionize(events: DataFrame,
     arrive and must keep its buffered same-timestamp peers company one
     more batch (hence the strict-< finalize predicate below).  The
     buffered window is bounded by the watermark delay: per user, state
-    holds the open session (four longs) plus at most ``watermark``-worth
+    holds the open session (four longs) plus at most SESSION_WATERMARK-worth
     of not-yet-finalized events — the standard cost of out-of-order
     correctness, sharded across executors by user.
 
     Emission (append mode): a session closes when a finalized later event
-    falls more than ``gap_minutes`` after the previous one, or by
+    falls more than SESSION_GAP_MIN after the previous one, or by
     event-time timeout once the watermark passes last + gap with nothing
     buffered that could extend it.
     """
@@ -114,7 +114,7 @@ def stream_sessionize(events: DataFrame,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_s = gap_minutes * 60
+    gap_s = SESSION_GAP_MIN * 60
     gap_ms = gap_s * 1000
 
     def _emit(user_id, start, last, n, cents):
@@ -196,7 +196,7 @@ def stream_sessionize(events: DataFrame,
     # TIMESTAMP_NTZ — the cast is gap-neutral (sessions compare differences)
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", SESSION_WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             fn, SESSION_OUT_SCHEMA, SESSION_STATE_SCHEMA, "append",
@@ -205,7 +205,7 @@ def stream_sessionize(events: DataFrame,
 
 
 def run_stream(spark: SparkSession, input_path: str, output_path: str,
-               checkpoint_path: str, num_buckets: int = 32):
+               checkpoint_path: str, num_buckets: int):
     """Wire source → extraction → parquet sink; returns the query handle."""
     extracted = stream_extract(stream_source(spark, input_path), num_buckets)
     return (

@@ -18,6 +18,7 @@ from readability_spark.ops.dedup import (
     dedup_clusters,
     near_dedup,
 )
+from readability_spark.ops.common import group_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -132,6 +133,28 @@ def test_shingle_rows_empty_for_short_docs(spark):
         "doc_id bigint, toks array<string>")
     rows = _shingle_rows(docs).collect()
     assert [(r["doc_id"], r["shingle"]) for r in rows] == [(3, "a b c")]
+
+
+def test_group_pairs_expands_capped_groups_without_dedup(spark):
+    """group_pairs (LSH pairs, embedding near-dup and SemDedup cells):
+    exactly the i<j pairs per group, lower id first, no self-pair from a
+    repeated id; a group over ``cap`` is dropped; a pair sharing two
+    groups comes out twice, because de-duplication is the caller's."""
+    rows = [("g1", 0, 10),                                  # size 1
+            ("g2", 0, 5), ("g2", 0, 2),                     # size 2
+            ("g3", 0, 9), ("g3", 0, 7), ("g3", 0, 8), ("g3", 0, 9),
+            ("g4", 0, 1), ("g4", 0, 2), ("g4", 0, 3), ("g4", 0, 4),
+            ("g2", 1, 2), ("g2", 1, 5)]                     # (2, 5) again
+    df = spark.createDataFrame(rows, "k string, j int, id bigint")
+
+    def pairs(cap):
+        out = group_pairs(df, ["k", "j"], "id", ("lo", "hi"), cap)
+        assert out.columns == ["lo", "hi"]
+        return sorted((r["lo"], r["hi"]) for r in out.collect())
+
+    assert pairs(3) == [(2, 5), (2, 5), (7, 8), (7, 9), (8, 9)]
+    assert pairs(None) == [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4),
+                           (2, 5), (2, 5), (3, 4), (7, 8), (7, 9), (8, 9)]
 
 
 def test_near_dedup_matches_oracle(spark):

@@ -2,7 +2,7 @@
 
 The production parse path (readability_core.htmltok.build_tree) is a fused
 reimplementation of CPython html.parser's feed()+close() semantics; the
-stdlib-driven builder (vdom.parse_html_stdlib) is kept as the oracle.  Any
+stdlib-driven builder (tests/_reference_forms.py) is kept as the oracle.  Any
 divergence — a fast-tokenizer bug OR a CPython html.parser contract change
 (the old ADVICE updatepos-canary concern) — fails here loudly instead of
 surfacing as golden-hash drift.

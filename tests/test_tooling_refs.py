@@ -122,6 +122,7 @@ def test_doc_python_commands_name_existing_files(doc):
 
 # defaulted parameters of these modules must each be set by some call
 PARAM_DEFINERS = ["readability_spark/ops", "readability_spark/pipeline.py",
+                  "readability_spark/streaming.py",
                   "readability_spark/transcripts.py",
                   "readability_spark/udfs.py"]
 PARAM_CALLERS = ["readability_core", "readability_spark", "tools", "jobs",
