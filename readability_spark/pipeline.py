@@ -15,9 +15,14 @@ Implements the north rule's scale requirements explicitly:
 
 At 100 TB the same code holds: bucket count scales with cluster cores
 (4 buckets/core keeps task size uniform), the UDF is Arrow-batched with
-per-batch record-count and byte caps, and the only shuffle in the job is
-the one explicit salt repartition (the metrics groupBy aggregates
-partially map-side on a small column set).
+per-batch record-count and byte caps, and by default the only shuffle in
+the job is the one explicit salt repartition (the metrics groupBy
+aggregates partially map-side on a small column set).  With
+``dedup_payloads=True`` there are two hash exchanges instead, both
+carrying the distinct text: the ``dropDuplicates`` one into
+``spark.sql.shuffle.partitions`` and the ``repartition(num_buckets,
+_tkey)`` one; the extracted records then reach every turn through a
+broadcast.
 """
 
 from __future__ import annotations
@@ -25,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readability_core.extract import MAX_HTML_BYTES
+
+from .schema import EXTRACT_SCHEMA
 from .udfs import make_extract_udf
 
 # Arrow rows/batch. Small batches matter enormously for UDF throughput:
@@ -53,12 +61,24 @@ from .udfs import make_extract_udf
 DEFAULT_ARROW_BATCH = 64
 PYTHON_SOCKET_BUFFER = 2 * 1024 * 1024
 
+# parquet.dictionary.page.size of every parquet write in the session: the
+# output and metrics tables and the stream sink.  At parquet's 1 MiB
+# default a column chunk drops to PLAIN as soon as its dictionary holds one
+# large extracted_text/extracted_md, and from then on every copy of a
+# repeated record (dedup_payloads joins one record back to each duplicate
+# turn) is written in full.  Twice the input cap keeps a capped page's text
+# in the dictionary beside other values, so each column chunk stores a
+# repeated record once.  The cost is writer memory: an open parquet writer
+# can buffer up to this many bytes of dictionary per string column.
+PARQUET_DICT_PAGE_BYTES = 2 * MAX_HTML_BYTES
+
 
 def build_session(app_name: str = "readability-spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
                   driver_memory: str | None = None) -> SparkSession:
-    """Session with the configs the pipeline relies on (AQE + Arrow).
+    """Session with the configs the pipeline relies on (AQE, Arrow and the
+    parquet dictionary page, PARQUET_DICT_PAGE_BYTES).
 
     In local mode the driver JVM IS the cluster — the 1g default heap GC-
     thrashes under 32 concurrent tasks, so size it like an executor.  On a
@@ -83,6 +103,8 @@ def build_session(app_name: str = "readability-spark",
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(PYTHON_SOCKET_BUFFER))
         .config("spark.buffer.size", str(PYTHON_SOCKET_BUFFER))
+        .config("spark.hadoop.parquet.dictionary.page.size",
+                str(PARQUET_DICT_PAGE_BYTES))
         # r8: InferFiltersFromGenerate clones each explode()'s child into
         # a pushed-down `size(child) > 0 AND isnotnull(child)` predicate;
         # when the child is a tokenize + n-gram build, every corpus row
@@ -135,6 +157,21 @@ def salt_and_partition(df: DataFrame, num_buckets: int) -> DataFrame:
     return df.repartition(num_buckets, "bucket_id")
 
 
+def record_cols(rec: str, valid: Column) -> list[Column]:
+    """The EXTRACT_SCHEMA fields of struct column ``rec``, in schema order.
+
+    ``valid`` is ``F.is_valid_utf8`` of the turn's raw text.  The UDF reads
+    ``F.make_valid_utf8(text)``, because PySpark's Arrow → pandas step
+    raises on invalid UTF-8 before any per-row fallback runs, failing the
+    whole job for one turn; each invalid byte sequence becomes U+FFFD.  A
+    repaired turn gets the non-fatal marker ``invalid_utf8:replaced`` in
+    ``error`` unless the core already set a marker there."""
+    marked = F.coalesce(F.col(f"{rec}.error"),
+                        F.when(~valid, F.lit("invalid_utf8:replaced")))
+    return [marked.alias(f) if f == "error" else F.col(f"{rec}.{f}")
+            for f in EXTRACT_SCHEMA.fieldNames()]
+
+
 def run_extraction(df: DataFrame, num_buckets: int | None = None,
                    char_threshold: int = 500,
                    dedup_payloads: bool = False) -> DataFrame:
@@ -161,14 +198,22 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
     md5 collisions are constructible by an adversarial corpus, so the
     key must be collision-resistant (the md5-only determinism rule
     covers gate-facing oracled queries, not internal keys).  Cost
-    model: replaces the salt exchange with a dropDuplicates shuffle
-    keyed on the payload hash plus a join of the corpus against the
+    model: replaces the salt exchange with two exchanges keyed on the
+    payload hash (the dropDuplicates shuffle and the repartition, see the
+    module docstring) plus a join of the corpus against the
     extracted-distinct table — pays off when the duplicate factor beats
     the extra shuffle, which at 10^12 turns of crawl-derived transcripts
     it overwhelmingly does.  The salt's skew job is done by
     hash-of-payload partitioning here; AQE splits any hot key.  Opt-in
     because a genuinely all-unique corpus pays ~2× shuffle for nothing.
-    Repeated whales collapse to one distinct row each before the UDF.
+    Repeated whales collapse to one distinct row each before the UDF, and
+    the session's parquet writer (build_session, PARQUET_DICT_PAGE_BYTES)
+    stores their copies once per column chunk, as dictionary entries.
+
+    Each turn's text reaches the UDF through ``F.make_valid_utf8``, and a
+    turn whose bytes were repaired carries ``invalid_utf8:replaced`` in
+    ``error`` (record_cols); on the dedup path the marker is computed on
+    the turn side, so each turn carries its own.
     """
     if num_buckets is None:
         num_buckets = n_buckets_for(df.sparkSession)
@@ -180,16 +225,16 @@ def run_extraction(df: DataFrame, num_buckets: int | None = None,
         extracted = (keyed.select("_tkey", "text")
                      .dropDuplicates(["_tkey"])
                      .repartition(num_buckets, "_tkey")
-                     .withColumn("x", udf(F.col("text")))
-                     .select("_tkey", "x.*"))
+                     .select("_tkey",
+                             udf(F.make_valid_utf8("text")).alias("x")))
         return (
             keyed.withColumn("bucket_id", salt_col(num_buckets))
+            .withColumn("_valid", F.is_valid_utf8("text"))
             .join(extracted, "_tkey")
-            .select(*cols, "bucket_id",
-                    *[f for f in extracted.columns if f != "_tkey"]))
+            .select(*cols, "bucket_id", *record_cols("x", F.col("_valid"))))
     salted = salt_and_partition(df.select(*cols, "text"), num_buckets)
-    return salted.withColumn("x", udf(F.col("text"))).select(
-        *cols, "bucket_id", "x.*")
+    return salted.withColumn("x", udf(F.make_valid_utf8("text"))).select(
+        *cols, "bucket_id", *record_cols("x", F.is_valid_utf8("text")))
 
 
 def derive_metrics(results: DataFrame, attempt: int = 1,

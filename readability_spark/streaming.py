@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ops.relational import SESSION_GAP_MIN
-from .pipeline import salt_col
+from .pipeline import record_cols, salt_col
 from .schema import TRANSCRIPT_SCHEMA
 from .udfs import extract_udf
 
@@ -56,11 +56,14 @@ def stream_extract(transcripts: DataFrame, num_buckets: int) -> DataFrame:
 
     No shuffle is injected here — a streaming repartition would force a
     stateful exchange per microbatch; instead the salt travels as a column
-    and the downstream sink partitions on it.
+    and the downstream sink partitions on it.  Invalid UTF-8 is repaired
+    and marked as in run_extraction (record_cols).
     """
     salted = transcripts.withColumn("bucket_id", salt_col(num_buckets))
-    return salted.withColumn("x", extract_udf(F.col("text"))).select(
-        "conv_id", "turn_idx", "bucket_id", "ts", "x.*")
+    return salted.withColumn(
+        "x", extract_udf(F.make_valid_utf8("text"))).select(
+        "conv_id", "turn_idx", "bucket_id", "ts",
+        *record_cols("x", F.is_valid_utf8("text")))
 
 
 def stream_conversation_stats(extracted: DataFrame) -> DataFrame:

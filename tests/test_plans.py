@@ -43,6 +43,23 @@ def test_run_extraction_one_shuffle_pruned_scan(spark):
     assert "ArrowEvalPython" in plan
 
 
+def test_run_extraction_dedup_plan(spark):
+    """dedup_payloads=True: two hash exchanges, both carrying the distinct
+    text (the dropDuplicates shuffle into spark.sql.shuffle.partitions and
+    repartition(num_buckets, _tkey)), then one UDF.  num_buckets differs
+    from the session's 8 shuffle partitions: with equal counts Spark drops
+    the repartition as already satisfied."""
+    from readability_spark.pipeline import run_extraction
+    from readability_spark.transcripts import generate_transcripts
+
+    df = generate_transcripts(spark, n_convs=4, seed=1, use_fixtures=False)
+    out = run_extraction(df.select("conv_id", "turn_idx", "role", "text"),
+                         num_buckets=4, dedup_payloads=True)
+    plan = plan_of(out)
+    assert nodes(plan, "Exchange") == 2, plan
+    assert nodes(plan, "ArrowEvalPython") == 1, plan
+
+
 def test_lsh_pairs_single_scan_single_minhash_agg(spark):
     from readability_spark.ops.dedup import lsh_candidate_pairs
 

@@ -132,6 +132,50 @@ def test_udfs_equal_plain_function_on_generated_turns(spark):
                for r in low)
 
 
+# b"\xff\xfe<p>bad bytes in a turn</p>": Spark's binary → string cast does
+# not validate UTF-8, and PySpark's Arrow → pandas step raises on it
+BAD_UTF8 = b"\xff\xfe<p>bad bytes in a turn</p>"
+
+
+def test_invalid_utf8_turn_is_marked_not_fatal(spark, tmp_path):
+    """20 good turns plus one invalid-UTF-8 turn through both run_extraction
+    paths and stream_extract (run_stream): the job finishes, the bad turn
+    carries invalid_utf8:replaced and is the core's record of the repaired
+    text, and every good turn equals plain extract()."""
+    from readability_spark.schema import TRANSCRIPT_SCHEMA
+    from readability_spark.streaming import run_stream
+
+    good = generate_rows(3, 2, use_fixtures=False)[:20]
+    bad = spark.sql(
+        f"SELECT 'conv_bad' AS conv_id, 0 AS turn_idx, 'tool' AS role, "
+        f"CAST(X'{BAD_UTF8.hex()}' AS STRING) AS text, 'browser' AS tool, "
+        f"TIMESTAMP'2024-01-01 00:00:00' AS ts")
+    turns = spark.createDataFrame(good, TRANSCRIPT_SCHEMA).unionByName(bad)
+    texts = {(r[0], r[1]): r[3] for r in good}
+    repaired = BAD_UTF8.decode("utf-8", "replace")
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    turns.coalesce(1).write.parquet(inp)
+
+    def check(rows):
+        by_key = {(r["conv_id"], r["turn_idx"]): r for r in rows}
+        marked = by_key.pop(("conv_bad", 0)).asDict()
+        assert marked.pop("error") == "invalid_utf8:replaced"
+        _assert_equals_core([marked | {"error": None}],
+                            {("conv_bad", 0): repaired}, build_aria=False)
+        _assert_equals_core(list(by_key.values()), texts, build_aria=False)
+
+    for dedup in (False, True):
+        check(run_extraction(turns.drop("tool", "ts"), 2,
+                             dedup_payloads=dedup).collect())
+    q = run_stream(spark, inp, out, str(tmp_path / "ckpt"), num_buckets=2)
+    q.awaitTermination(300)
+    check(spark.read.parquet(out).collect())
+    # derive_metrics counts the marker as a warning, not a failure
+    m = derive_metrics(run_extraction(turns, 1), num_buckets=1).first()
+    assert (m["n_turns"], m["n_errors"], m["n_warnings"], m["status"]) \
+        == (21, 0, 1, "ok")
+
+
 def test_extract_record_fallback_carries_every_field(monkeypatch):
     """One row raising inside the core yields a full EXTRACT_SCHEMA record
     marked exception:<Type>, and the batch frame still builds."""
